@@ -2146,17 +2146,10 @@ object Curation extends QueryModule {
   private[operators] def streamPrioritySample(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-      .select($"doc_id", $"source", $"n_chars")
-    val feed = graft.streaming.Streams.replayByLongRanges(docs, "doc_id", nChunks)
-    val updates = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[PsDoc]
+    val docs = graft.streaming.Streams.replay(outer, "doc_id", nChunks)(
+      Tables.documents(_, dir).select("doc_id", "source", "n_chars"))
+    import docs.sparkSession.implicits._
+    val updates = docs.as[PsDoc]
       .groupByKey(_.source)
       .transformWithState(new PsProcessor, TimeMode.None(), OutputMode.Update())
       .toDF()

@@ -592,7 +592,7 @@ object Multimodal extends QueryModule {
       }).toDF()
       // r14 (guide §2.4): the final global sort is a RangePartitioner,
       // whose bounds-sampling pass EXECUTED THE WHOLE MJPEG DECODE a
-      // second time (two ~1.2 s jobs back-to-back in JobLogProbe).
+      // second time (two ~1.2 s jobs back-to-back in the per-job timings).
       // Materialize the frame-grain feature table once; the sort then
       // samples a parquet scan.
       Scoped.materialize()(feats).orderBy($"doc_id", $"frame_idx")

@@ -49,9 +49,11 @@ private[graft] object Scoped {
   /** Debug hook: the executed plan of the most recent [[materialize]]
     * INPUT — the plan the materialization boundary would otherwise hide
     * behind a FileScan. PlanSpec asserts pre-write plan shape through
-    * this; never read on a production path.
+    * this; never read on a production path. Captured as a THUNK so
+    * production calls never pay the extra plan pass and rendering.
     */
-  @volatile private[graft] var lastMaterializedPlan: String = ""
+  @volatile private var lastMaterializedPlanThunk: () => String = () => ""
+  private[graft] def lastMaterializedPlan: String = lastMaterializedPlanThunk()
 
   /** Audit hook: when installed (WindowBoundsSpec), sees the OPTIMIZED
     * logical plan of every materialize input and every shared build —
@@ -65,7 +67,7 @@ private[graft] object Scoped {
   def materialize(persisted: DataFrame*)(result: DataFrame): DataFrame = {
     val spark = result.sparkSession
     planAudit.foreach(_(result.queryExecution.optimizedPlan))
-    lastMaterializedPlan = result.queryExecution.executedPlan.toString
+    lastMaterializedPlanThunk = () => result.queryExecution.executedPlan.toString
     val out = newTempDir("graft_mat_")
     result.write.mode("overwrite").parquet(out)
     persisted.foreach(_.unpersist())

@@ -1347,16 +1347,9 @@ object Series extends QueryModule {
   private[operators] def streamDollarBars(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val t = tickTape(spark, dir)
-    val feed = graft.streaming.Streams.replayByDates(t, "day", nChunks)
-    val bars = spark.readStream.schema(t.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[DbTick]
+    val ticks = graft.streaming.Streams.replay(outer, "day", nChunks)(tickTape(_, dir))
+    import ticks.sparkSession.implicits._
+    val bars = ticks.as[DbTick]
       .groupByKey(_.tkr)
       .transformWithState(new DbProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()
@@ -1940,16 +1933,9 @@ object Series extends QueryModule {
   private[operators] def streamImbalanceBars(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val t = tickTape(spark, dir)
-    val feed = graft.streaming.Streams.replayByDates(t, "day", nChunks)
-    val bars = spark.readStream.schema(t.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[DbTick]
+    val ticks = graft.streaming.Streams.replay(outer, "day", nChunks)(tickTape(_, dir))
+    import ticks.sparkSession.implicits._
+    val bars = ticks.as[DbTick]
       .groupByKey(_.tkr)
       .transformWithState(new IbProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()
@@ -2114,16 +2100,9 @@ object Series extends QueryModule {
   private[operators] def streamVpin(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val t = tickTape(spark, dir)
-    val feed = graft.streaming.Streams.replayByDates(t, "day", nChunks)
-    val buckets = spark.readStream.schema(t.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[DbTick]
+    val ticks = graft.streaming.Streams.replay(outer, "day", nChunks)(tickTape(_, dir))
+    import ticks.sparkSession.implicits._
+    val buckets = ticks.as[DbTick]
       .groupByKey(_.tkr)
       .transformWithState(new VpinProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()
@@ -2258,16 +2237,9 @@ object Series extends QueryModule {
   private[operators] def streamKyle(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val t = tickTape(spark, dir)
-    val feed = graft.streaming.Streams.replayByDates(t, "day", nChunks)
-    val lambdas = spark.readStream.schema(t.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[DbTick]
+    val ticks = graft.streaming.Streams.replay(outer, "day", nChunks)(tickTape(_, dir))
+    import ticks.sparkSession.implicits._
+    val lambdas = ticks.as[DbTick]
       .groupByKey(_.tkr)
       .transformWithState(new KyleProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()
@@ -2378,16 +2350,9 @@ object Series extends QueryModule {
   private[operators] def streamDrawdown(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val t = tickTape(spark, dir)
-    val feed = graft.streaming.Streams.replayByDates(t, "day", nChunks)
-    val records = spark.readStream.schema(t.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[DbTick]
+    val ticks = graft.streaming.Streams.replay(outer, "day", nChunks)(tickTape(_, dir))
+    import ticks.sparkSession.implicits._
+    val records = ticks.as[DbTick]
       .groupByKey(_.tkr)
       .transformWithState(new DrawdownProcessor, TimeMode.None(),
         OutputMode.Append())

@@ -1233,28 +1233,25 @@ object WindowFeatures extends QueryModule {
   private[graft] def tickersOf(spark: SparkSession, dir: String): Long =
     bars(spark, dir).select("ticker").distinct().count()
 
+  /** The (ticker, date, close cents) bar stream replayed as `nChunks`
+    * date-range files — the shared q223/q240 feed.
+    */
+  private def barCentsReplay(
+      outer: SparkSession, dir: String, nChunks: Int): DataFrame =
+    graft.streaming.Streams.replay(outer, "date", nChunks)(bars(_, dir)
+      .withColumn("cents",
+        (col("close").cast(DecimalType(28, 2)) * 100).cast("long"))
+      .select(col("ticker"), col("date"), col("cents")))
+
   /** The q223 build, chunking exposed for the batch-boundary-independence
     * spec: the bar stream is replayed as `nChunks` date-range files.
     */
   private[operators] def streamTripleBarrier(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    // session clone: streaming state runs at 8 shuffle partitions and on
-    // the RocksDB provider (transformWithState requires it) without the
-    // batch session ever observing either conf — the q128 discipline
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val b = bars(spark, dir)
-      .withColumn("cents",
-        ($"close".cast(DecimalType(28, 2)) * 100).cast("long"))
-      .select($"ticker", $"date", $"cents")
-    val feed = graft.streaming.Streams.replayByDates(b, "date", nChunks)
-    val labels = spark.readStream.schema(b.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[TbBar]
+    val b = barCentsReplay(outer, dir, nChunks)
+    import b.sparkSession.implicits._
+    val labels = b.as[TbBar]
       .groupByKey(_.ticker)
       .transformWithState(new TbProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()
@@ -1329,19 +1326,9 @@ object WindowFeatures extends QueryModule {
   private[operators] def streamCusum(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val b = bars(spark, dir)
-      .withColumn("cents",
-        ($"close".cast(DecimalType(28, 2)) * 100).cast("long"))
-      .select($"ticker", $"date", $"cents")
-    val feed = graft.streaming.Streams.replayByDates(b, "date", nChunks)
-    val events = spark.readStream.schema(b.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .as[TbBar]
+    val b = barCentsReplay(outer, dir, nChunks)
+    import b.sparkSession.implicits._
+    val events = b.as[TbBar]
       .groupByKey(_.ticker)
       .transformWithState(new CuProcessor, TimeMode.None(), OutputMode.Append())
       .toDF()

@@ -45,6 +45,18 @@ object Streams extends QueryModule {
     ss
   }
 
+  /** [[streamSession]] on the RocksDB state-store provider: the session
+    * of every transformWithState query (the API requires RocksDB). The
+    * provider is set on the clone only, so batch queries and the other
+    * streaming queries keep the default HDFS-backed provider.
+    */
+  private def statefulSession(spark: SparkSession): SparkSession = {
+    val ss = streamSession(spark)
+    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    ss
+  }
+
   /** Streaming scan of the events fixture (S2 as file source). Schema is
     * declared, never inferred (§1.2): the fixture stores `ts` as parquet
     * TIMESTAMP(MICROS) without UTC adjustment, declared here as NTZ and
@@ -64,40 +76,6 @@ object Streams extends QueryModule {
       .withColumn("ts", col("ts").cast(TimestampType))
   }
 
-  /** Production Kafka source configuration (S2). These are the exact
-    * rate-shaping / recovery options the reference pins on its streaming
-    * scans — reference data_processing/reddit_pipeline.py:80-88 (reddit:
-    * maxOffsetsPerTrigger=10000), data_processing/stock_pipeline.py:68-76
-    * (stock: 1000), data_collection/spark_consumer.py:92-97 — kept in one
-    * audited builder so the file-source twin and the production source
-    * can never drift. The spark-sql-kafka connector jar is not in this
-    * container, so `.load()` is exercised in production only; the options
-    * contract is unit-tested (StreamingSpec).
-    */
-  private[graft] def kafkaSourceOptions(
-      bootstrapServers: String,
-      topic: String,
-      maxOffsetsPerTrigger: Long,
-      startingOffsets: String = "earliest"): Map[String, String] = Map(
-    "kafka.bootstrap.servers" -> bootstrapServers,
-    "subscribe" -> topic,
-    "startingOffsets" -> startingOffsets,
-    // reference tolerates topic truncation/expiry rather than dying
-    "failOnDataLoss" -> "false",
-    "maxOffsetsPerTrigger" -> maxOffsetsPerTrigger.toString)
-
-  /** The production streaming scan: `readStream.format("kafka")` with the
-    * reference's options. Downstream of `.load()` the plan is IDENTICAL to
-    * [[eventsStream]]'s (value bytes → from_json → transforms).
-    */
-  private[graft] def kafkaStreamReader(
-      spark: SparkSession,
-      bootstrapServers: String,
-      topic: String,
-      maxOffsetsPerTrigger: Long): org.apache.spark.sql.streaming.DataStreamReader =
-    kafkaSourceOptions(bootstrapServers, topic, maxOffsetsPerTrigger)
-      .foldLeft(spark.readStream.format("kafka")) { case (r, (k, v)) => r.option(k, v) }
-
   /** The §3.1 silver transform: watermark (T1) + 15-min tumbling window
     * (T2) feature agg. Works on a streaming OR batch events frame.
     */
@@ -115,15 +93,6 @@ object Streams extends QueryModule {
         $"event_type", $"post_count", $"total_score", $"max_score")
   }
 
-  /** Run a bounded streaming frame to completion through a FILE sink and
-    * re-read the result as a batch frame (the q43 round-trip pattern,
-    * generalized). The memory sink materializes the whole result on the
-    * driver — at 100× the q42 join output that is a driver OOM — so every
-    * query-path capture goes through foreachBatch → parquet instead;
-    * `MemoryStream`/memory sinks survive only inside StreamingSpec.
-    * "complete" mode re-emits the full result each micro-batch ⇒ overwrite
-    * per batch; "append"/"update" emit deltas ⇒ append per batch.
-    */
   /** Final state-store census of the most recent [[runToParquet]] run:
     * Σ numRowsTotal over the query's stateful operators at termination.
     * −1 = no progress was recorded. StateBoundsSpec reads this to check
@@ -133,24 +102,6 @@ object Streams extends QueryModule {
     */
   @volatile private[graft] var lastStateRows: Long = -1L
 
-  /** Test-only: observe the last progress object itself. */
-  @volatile private[graft] var progressAudit:
-      Option[org.apache.spark.sql.streaming.StreamingQueryProgress => Unit] = None
-
-  /** Replay feed builder shared by the stateful-replay queries
-    * (q223/q235/q240): write `df` as `nChunks` date-range parquet files
-    * with STRICTLY INCREASING mtimes, so the file stream source
-    * (maxFilesPerTrigger=1) consumes them in date order — the
-    * kafka-replay stand-in. `dayCol` must be a date column; the
-    * distinct-date collect is bounded driver model state (P12: ≤
-    * |trading days| rows). Returns the feed directory.
-    */
-  /** [[replayByDates]] for a LONG key column (doc ingestion replays,
-    * where the natural arrival order is the id sequence): same
-    * strictly-increasing-mtime chunked feed, ranges over the distinct
-    * key values. The distinct collect is bounded driver model state
-    * (P12: ≤ |ids| of a dimension-sized table).
-    */
   /** Feed memo (r13 optimization) — the [[graft.operators.Scoped]]
     * discipline applied to replay feeds: a feed is a DETERMINISTIC
     * function of (source plan, key column, chunk count) — five Series
@@ -171,34 +122,44 @@ object Streams extends QueryModule {
     s"$keyCol|$nChunks|" +
       df.queryExecution.analyzed.canonicalized.toString
 
-  /** r14 (guide §5 state / VERDICT r13 #8): the ten replay QueryDefs
-    * feed 2 chunks (was 4) — per micro-batch every stateful operator
-    * pays a fixed per-partition state-store open/commit, and the
-    * replay results are batch-boundary-independent BY CONTRACT (each
+  /** Replay feed: write `df` as `nChunks` parquet files over contiguous
+    * ranges of the distinct `keyCol` values, with STRICTLY INCREASING
+    * mtimes, so the file stream source (maxFilesPerTrigger=1) consumes
+    * them in key order — the kafka-replay stand-in. The key is a date
+    * (market tapes, event days) or a long (doc ingestion, where the
+    * natural arrival order is the id sequence). The distinct-key collect
+    * is bounded driver model state (P12: ≤ |trading days| or ≤ |ids| of
+    * a dimension-sized table). Memoized per (plan, key, chunks); returns
+    * the feed directory.
+    */
+  private[graft] def replayFeed(
+      df: DataFrame, keyCol: String, nChunks: Int): String =
+    feedMemo.computeIfAbsent(memoKey(df, keyCol, nChunks), _ =>
+      writeChunkedFeed(df, keyCol, nChunks,
+        df.select(col(keyCol)).distinct().orderBy(col(keyCol))
+          .collect().map(r => lit(r.get(0)))))
+
+  /** The replay harness of the stateful-replay queries: builds `src` on a
+    * [[statefulSession]] clone, writes it as a [[replayFeed]] over
+    * `keyCol`, and returns the stream reading that feed one file per
+    * trigger, so each chunk is one micro-batch, in key order. The
+    * returned frame's `sparkSession` is the clone.
+    *
+    * The replay QueryDefs feed 2 chunks: per micro-batch every stateful
+    * operator pays a fixed per-partition state-store open/commit, and
+    * the replay results are batch-boundary-independent BY CONTRACT (each
     * family's spec re-proves equality at chunkings 4/6/7/9; the DuckDB
     * oracle gates the values). Two chunks still cross a real batch
     * boundary, so cross-batch state is exercised; the chunk count is a
     * replay-harness parameter, not operator semantics.
     */
-  private[graft] def replayByLongRanges(
-      df: DataFrame, keyCol: String, nChunks: Int): String =
-    feedMemo.computeIfAbsent(memoKey(df, keyCol, nChunks), _ => {
-      import org.apache.spark.sql.functions.col
-      val keys = df.select(col(keyCol)).distinct().orderBy(col(keyCol))
-        .collect().map(_.getLong(0))
-      writeChunkedFeed(df, keyCol, nChunks,
-        keys.map(k => org.apache.spark.sql.functions.lit(k)))
-    })
-
-  private[graft] def replayByDates(
-      df: DataFrame, dayCol: String, nChunks: Int): String =
-    feedMemo.computeIfAbsent(memoKey(df, dayCol, nChunks), _ => {
-      import org.apache.spark.sql.functions.col
-      val dates = df.select(col(dayCol)).distinct().orderBy(col(dayCol))
-        .collect().map(_.getDate(0))
-      writeChunkedFeed(df, dayCol, nChunks,
-        dates.map(d => org.apache.spark.sql.functions.lit(d)))
-    })
+  private[graft] def replay(outer: SparkSession, keyCol: String, nChunks: Int)(
+      src: SparkSession => DataFrame): DataFrame = {
+    val spark = statefulSession(outer)
+    val df = src(spark)
+    spark.readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", "1").parquet(replayFeed(df, keyCol, nChunks))
+  }
 
   /** ONE-PASS chunked feed writer (r13 optimization). The original form
     * ran `nChunks` separate filter+coalesce(1) write jobs — each a full
@@ -251,6 +212,15 @@ object Streams extends QueryModule {
     feed
   }
 
+  /** Run a bounded streaming frame to completion through a FILE sink and
+    * re-read the result as a batch frame (the q43 round-trip pattern,
+    * generalized). The memory sink materializes the whole result on the
+    * driver — at 100× the q42 join output that is a driver OOM — so every
+    * query-path capture goes through foreachBatch → parquet instead;
+    * `MemoryStream`/memory sinks survive only inside StreamingSpec.
+    * "complete" mode re-emits the full result each micro-batch ⇒ overwrite
+    * per batch; "append"/"update" emit deltas ⇒ append per batch.
+    */
   private[graft] def runToParquet(df: DataFrame, mode: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val spark = df.sparkSession
@@ -288,7 +258,6 @@ object Streams extends QueryModule {
     q.awaitTermination()
     lastStateRows = Option(q.lastProgress)
       .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    Option(q.lastProgress).foreach(p => progressAudit.foreach(_(p)))
     q.stop()
     // a stream that yielded no rows wrote no files — return an empty frame
     // with the stream's schema instead of letting parquet schema inference
@@ -498,13 +467,9 @@ object Streams extends QueryModule {
   private val q128 = QueryDef(
     "q128_transform_with_state",
     (outer, dir) => {
-      val spark = streamSession(outer)
+      val spark = statefulSession(outer)
       import spark.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      // transformWithState requires the RocksDB provider; scoped to the
-      // clone so batch queries never see it
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val updates = eventsStream(spark, dir)
         .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
         .as[EventRow]
@@ -816,9 +781,9 @@ object Streams extends QueryModule {
   // exact spark-sql-kafka record schema from the events fixture, so the
   // full production plan — `.load()` → value bytes → `from_json` decode →
   // transforms — runs end-to-end with real per-partition offsets and
-  // admission control. Swapping in real Kafka is the format string + the
-  // kafkaSourceOptions builder above; every line downstream of `.load()`
-  // is shared.
+  // admission control. Swapping in real Kafka changes the format string
+  // and the source options (bootstrap servers, topic subscription); every
+  // line downstream of `.load()` is shared.
   // ---------------------------------------------------------------------
   /** The producers' JSON wire schema (value bytes decode to this; `ts` is
     * epoch micros).
@@ -1223,19 +1188,13 @@ object Streams extends QueryModule {
   private[graft] def streamDriftCells(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
+    val ev = replay(outer, "day", nChunks)(Tables.events(_, dir)
       .filter(col("event_id").isNotNull && col("value").isNotNull)
       .select(col("event_id"), col("event_type"), col("value"),
         coalesce(to_date(col("ts")), lit(java.sql.Date.valueOf("1970-01-01")))
-          .as("day"))
-    val feed = replayByDates(ev, "day", nChunks)
-    val updates = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
+          .as("day")))
+    import ev.sparkSession.implicits._
+    val updates = ev
       .select(col("event_id"), col("event_type"), col("value"))
       .as[DriftEv]
       .groupByKey(_.event_type)
@@ -1348,20 +1307,14 @@ object Streams extends QueryModule {
   private[graft] def streamSessionTimeouts(
       outer: SparkSession, dir: String, nChunks: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = outer.newSession()
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
+    val ev = replay(outer, "day", nChunks)(Tables.events(_, dir)
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("user_id"), unix_micros(col("ts")).as("tus"),
         col("event_id"),
         expr("CAST(round(coalesce(value, 0) * 100) AS BIGINT)").as("cents"),
-        to_date(col("ts")).as("day"))
-    val feed = replayByDates(ev, "day", nChunks)
-    val closed = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
+        to_date(col("ts")).as("day")))
+    import ev.sparkSession.implicits._
+    val closed = ev
       .withColumn("ts", timestamp_micros(col("tus")))
       .withWatermark("ts", "0 seconds")
       .select(col("user_id"), col("tus"), col("event_id"), col("cents"))

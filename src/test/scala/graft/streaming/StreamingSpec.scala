@@ -411,4 +411,48 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     assert(re.toSeq === streamed.toSeq)
   }
+
+  /** A replay feed's parquet files in mtime order: (mtime, sorted keys). */
+  private def feedChunks(feed: String, keyCol: String)(
+      keyOf: org.apache.spark.sql.Row => Long): Seq[(Long, Seq[Long])] =
+    new java.io.File(feed).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified())
+      .map(f => f.lastModified() ->
+        spark.read.parquet(f.getPath).select(col(keyCol)).distinct()
+          .collect().map(keyOf).toSeq.sorted)
+
+  test("replayFeed: one file per contiguous key range, mtimes rising in key order") {
+    // long key: 10 distinct keys × 3 rows, 3 chunks of ⌈10/3⌉ = 4 keys
+    val longs = spark.range(0, 30).select((col("id") % 10).as("k"), col("id").as("v"))
+    val longFeed = Streams.replayFeed(longs, "k", 3)
+    val lc = feedChunks(longFeed, "k")(_.getLong(0))
+    assert(lc.map(_._2) === Seq(0L to 3L, 4L to 7L, 8L to 9L))
+    assert(lc.map(_._1).sliding(2).forall { case Seq(a, b) => a < b })
+    assert(spark.read.parquet(longFeed).count() === 30L)
+    // date key: 10 distinct days × 2 rows, 4 chunks of ⌈10/4⌉ = 3 days
+    val base = java.time.LocalDate.parse("2024-01-01")
+    val dates = spark.range(0, 20).select(
+      date_add(lit(java.sql.Date.valueOf(base)), (col("id") / 2).cast("int")).as("day"),
+      col("id").as("v"))
+    val dateFeed = Streams.replayFeed(dates, "day", 4)
+    val dc = feedChunks(dateFeed, "day")(
+      _.getDate(0).toLocalDate.toEpochDay - base.toEpochDay)
+    assert(dc.map(_._2) === Seq(0L to 2L, 3L to 5L, 6L to 8L, 9L to 9L))
+    assert(dc.map(_._1).sliding(2).forall { case Seq(a, b) => a < b })
+    assert(spark.read.parquet(dateFeed).count() === 20L)
+  }
+
+  test("replayFeed: empty source gives an empty feed; a repeated (plan, key, chunks) is memoized") {
+    val empty = Streams.replayFeed(spark.range(0, 0).select(col("id").as("e")), "e", 2)
+    assert(new java.io.File(empty).isDirectory)
+    assert(new java.io.File(empty).listFiles().isEmpty)
+    def src(s: org.apache.spark.sql.SparkSession) =
+      s.range(0, 12).select((col("id") % 4).as("m"), col("id").as("v"))
+    val first = Streams.replayFeed(src(spark), "m", 2)
+    assert(Streams.replayFeed(src(spark), "m", 2) === first)
+    // the memo keys on the canonicalized plan, so a cloned session's copy
+    // of the same source reuses the feed too
+    assert(Streams.replayFeed(src(spark.newSession()), "m", 2) === first)
+    assert(Streams.replayFeed(src(spark), "m", 3) !== first)
+  }
 }
