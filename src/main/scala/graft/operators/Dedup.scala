@@ -396,6 +396,23 @@ object Dedup extends QueryModule {
           graft.functions.Portable.md5Hash64($"s").as("hs"), $"df"))
     })
 
+  /** Gram-key contract of the q37/q232/q319 VERIFY joins. They match
+    * grams on `Portable.md5Hash64` (the top 60 bits of the gram's md5),
+    * not on the gram string. A collision in CANDIDATE generation only adds
+    * a candidate that verification rejects; a collision in the verify
+    * join counts two distinct grams as one shared gram, inflates the
+    * intersection k and can admit a false pair that the DuckDB oracle
+    * (string equality) never sees at fixture scale. For n distinct grams
+    * the expected number of colliding gram pairs is
+    * C(n, 2) / 2^60 ≈ n² / 2^61. The contract is rated for
+    * [[GramKeyRatedGrams]] distinct grams, where that expectation is
+    * ≈ 4.9e-4; ScaleBehaviorSpec pins it. A corpus beyond the rating
+    * should verify on the gram string.
+    */
+  private[graft] val GramKeyRatedGrams: Long = 1L << 25
+  private[graft] def gramKeyExpectedCollisions(nGrams: Long): Double =
+    nGrams.toDouble * (nGrams - 1) / 2 / math.pow(2, 60)
+
   /** Candidate-generation cut of [[word3grams]]: grams whose document
     * frequency within their (lang, length-bucket) block is ≤ [[GramDfCap]].
     * Without the cap a single stop-gram ("one of the") pairs nearly every
@@ -448,6 +465,7 @@ object Dedup extends QueryModule {
       // stream the candidate explosion over parallel exchanges.
       val sizes = Scoped.materialize()(
         grams.groupBy($"doc_id").agg(count(lit(1)).as("n")))
+      // verify on the 60-bit gram key: see GramKeyRatedGrams for the bound
       val inter = cands
         .join(grams.as("a").hint("shuffle_hash"), col("a.doc_id") === $"i")
         .join(grams.as("b").hint("shuffle_hash"),
@@ -548,6 +566,7 @@ object Dedup extends QueryModule {
       // corpus side must never be the broadcast side at scale; a
       // shuffled hash join streams the candidate explosion and builds
       // per-partition tables over the grams shuffle instead.
+      // verify on the 60-bit gram key: see GramKeyRatedGrams for the bound
       val inter = cands
         .join(grams.as("ga").hint("shuffle_hash"), col("ga.doc_id") === $"i")
         .join(grams.as("gb").hint("shuffle_hash"),
@@ -1524,6 +1543,7 @@ object Dedup extends QueryModule {
         .join(broadcast(sizes), "doc_id")
         .select($"doc_id".as("q_id"), $"hs", $"n".as("qn"))
       val csh = sh.join(broadcast(sizes), "doc_id")
+      // verify on the 60-bit shingle key: see GramKeyRatedGrams for the bound
       val inter = csh.join(broadcast(qsh),
           csh("hs") === qsh("hs") && $"q_id" =!= csh("doc_id") &&
             greatest($"qn", csh("n")) <= least($"qn", csh("n")) * 2)

@@ -75,6 +75,7 @@ object Extras extends QueryModule {
         .filter($"rn" === 1)
         .select($"user_id", $"event_id", $"ts", $"event_type", $"value")
         .write.mode("overwrite").parquet(out)
+      // plain inference: the upsert round-trip itself is under test
       spark.read.parquet(out).orderBy($"user_id")
     },
     Some("""
@@ -342,6 +343,7 @@ object Extras extends QueryModule {
         ev.filter($"event_type" === "purchase")
           .withColumn("value", $"value" * 2)
           .write.mode("overwrite").partitionBy("event_type").parquet(out)
+        // plain inference: partition discovery after the overwrite is the test
         spark.read.parquet(out)
           .groupBy($"event_type")
           .agg(
@@ -379,6 +381,7 @@ object Extras extends QueryModule {
       docs.filter($"doc_id" % 2 === 1)
         .select($"doc_id", $"lang", $"n_chars")
         .write.parquet(s"$base/gen2")
+      // plain inference: the mergeSchema evolution read is the test
       spark.read.option("mergeSchema", "true")
         .parquet(s"$base/gen1", s"$base/gen2")
         .groupBy($"lang")

@@ -30,6 +30,7 @@ object ScalePatterns extends QueryModule {
       val out = Files.createTempDirectory("graft_part_").toString + "/events_by_type"
       Tables.events(spark, dir)
         .write.mode("overwrite").partitionBy("event_type").parquet(out)
+      // plain inference: partition discovery is the operator under test
       spark.read.parquet(out)
         .filter($"event_type" === "purchase")
         .groupBy(to_date($"ts").as("date"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Parquet
 import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
@@ -35,16 +36,15 @@ private[graft] object Scoped {
     dir
   }
 
-  sys.addShutdownHook {
-    tempDirs.forEach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        Files.walk(java.nio.file.Paths.get(d)).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(Files.deleteIfExists(_))
-      } catch { case _: Exception => () } // best-effort cleanup
-    }
-  }
+  private def deleteDir(d: String): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(d)).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(Files.deleteIfExists(_))
+    } catch { case _: Exception => () } // best-effort cleanup
+
+  sys.addShutdownHook(tempDirs.forEach(deleteDir(_)))
 
   /** Debug hook: the executed plan of the most recent [[materialize]]
     * INPUT — the plan the materialization boundary would otherwise hide
@@ -71,7 +71,7 @@ private[graft] object Scoped {
     val out = newTempDir("graft_mat_")
     result.write.mode("overwrite").parquet(out)
     persisted.foreach(_.unpersist())
-    spark.read.parquet(out)
+    Parquet.read(spark, out, Some(result.schema))
   }
 
   /** Materialized DERIVED TABLE, built once per (key) per session.
@@ -85,6 +85,11 @@ private[graft] object Scoped {
     * later caller (any query, any pass) reads the parquet. Unlike
     * `persist()` reuse, nothing occupies executor memory between queries.
     *
+    * Read-back: the build's writer keeps the schema of the frame it wrote
+    * next to the path, and every read (first or later caller, any session)
+    * re-reads the parquet through [[graft.sources.Parquet.read]] with that
+    * schema — a warm read starts no Spark job (no footer inference).
+    *
     * ASSUMES IMMUTABLE INPUTS for the life of the session: the cache keys
     * on the logical name (which embeds the input dir path), so if the
     * files under that path are rewritten the cached derivation is stale.
@@ -93,8 +98,8 @@ private[graft] object Scoped {
     * fingerprint (e.g. max modification time + file count) instead —
     * call `invalidate()` to drop the cache explicitly.
     */
-  private val sharedPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val sharedPaths = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
 
   /** Every key a shared build has run for this session — the audit trail
     * SilverRegistrySpec checks against the declared [[Silver]] registry,
@@ -112,9 +117,10 @@ private[graft] object Scoped {
     // NOT computeIfAbsent: derived tables nest (the global-rn build reads
     // the bars table), and a nested computeIfAbsent on the same map is a
     // recursive-update error. A lost race just builds twice into separate
-    // temp dirs — idempotent and harmless.
-    var path = sharedPaths.get(key)
-    if (path == null) {
+    // temp dirs; the loser deletes its own dir at once and reads the
+    // winner's.
+    var table = sharedPaths.get(key)
+    if (table == null) {
       built.add(key)
       val (persisted, result) = build
       planAudit.foreach(_(result.queryExecution.optimizedPlan))
@@ -124,10 +130,14 @@ private[graft] object Scoped {
       val out = newTempDir(s"graft_shared_${slug}_")
       result.write.mode("overwrite").parquet(out)
       persisted.foreach(_.unpersist())
-      val prev = sharedPaths.putIfAbsent(key, out)
-      path = if (prev == null) out else prev
+      val prev = sharedPaths.putIfAbsent(key, (out, result.schema))
+      table = if (prev == null) (out, result.schema) else {
+        tempDirs.remove(out)
+        deleteDir(out)
+        prev
+      }
     }
-    spark.read.parquet(path)
+    Parquet.read(spark, table._1, Some(table._2))
   }
 
   /** Drop every cached derived table (next caller rebuilds). For tests and

@@ -31,7 +31,7 @@ object FixtureFingerprint {
     TableNames.map { t =>
       val fp =
         try {
-          val schema = spark.read.parquet(s"$dir/$t.parquet").schema
+          val schema = Parquet.read(spark, s"$dir/$t.parquet").schema
             .map(f => s"${f.name}:${f.dataType.sql}").mkString(",")
           md5hex(schema).take(12)
         } catch { case _: Exception => "absent" }

@@ -3,8 +3,10 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scans over the fixture catalog (TESTDATA.md). One parquet file per
-  * logical table; reads are plain `spark.read.parquet` so Catalyst keeps
-  * filter pushdown + column pruning all the way into the scan.
+  * logical table; reads go through [[Parquet.read]] (schema inferred once
+  * per session and file version) and stay plain parquet scans, so
+  * Catalyst keeps filter pushdown + column pruning all the way into the
+  * scan.
   *
   * At cluster scale these would be partitioned/bucketed tables (SURVEY.md
   * §4: partition by date so the reference's date-range access pattern —
@@ -13,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

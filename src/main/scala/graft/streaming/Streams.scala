@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -213,7 +213,8 @@ object Streams extends QueryModule {
   }
 
   /** Run a bounded streaming frame to completion through a FILE sink and
-    * re-read the result as a batch frame (the q43 round-trip pattern,
+    * re-read the result as a batch frame with the stream's own schema, so
+    * the re-read infers nothing (the q43 round-trip pattern,
     * generalized). The memory sink materializes the whole result on the
     * driver — at 100× the q42 join output that is a driver OOM — so every
     * query-path capture goes through foreachBatch → parquet instead;
@@ -264,7 +265,7 @@ object Streams extends QueryModule {
     // throw on the empty directory
     val wrote = Option(new java.io.File(out).listFiles())
       .exists(_.exists(_.getName.endsWith(".parquet")))
-    if (wrote) spark.read.parquet(out)
+    if (wrote) Parquet.read(spark, out, Some(df.schema))
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
   }
@@ -341,6 +342,7 @@ object Streams extends QueryModule {
         .start()
       q.awaitTermination() // AvailableNow terminates when caught up
       q.stop()
+      // plain inference: reading the sunk bronze files back is the test
       spark.read.parquet(out)
         .groupBy($"event_type")
         .agg(
@@ -1333,7 +1335,10 @@ object Streams extends QueryModule {
 
   private val q268 = QueryDef(
     "q268_stream_session_timeout",
-    (outer, dir) => streamSessionTimeouts(outer, dir, 2),
+    // 4 chunks, not the 2 of the other replay queries: the driver-contract
+    // run keeps one query whose state (sessions + event-time timers)
+    // crosses more than one micro-batch boundary
+    (outer, dir) => streamSessionTimeouts(outer, dir, 4),
     Some("""
       WITH ev AS (
         SELECT user_id, ts, event_id,

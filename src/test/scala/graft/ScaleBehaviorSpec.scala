@@ -550,4 +550,26 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       plan.contains("BroadcastHashJoin"),
       plan.linesIterator.take(20).mkString("\n"))
   }
+
+  test("gram-key contract: expected 60-bit key collisions stay below 1e-3 at the rated corpus size") {
+    import graft.operators.Dedup.{GramKeyRatedGrams, gramKeyExpectedCollisions}
+    // the pinned bound: C(n, 2) / 2^60 at the declared rating
+    assert(GramKeyRatedGrams === (1L << 25))
+    assert(gramKeyExpectedCollisions(GramKeyRatedGrams) <= 1e-3,
+      gramKeyExpectedCollisions(GramKeyRatedGrams))
+    // the formula's shape on a key cut to 20 bits, where collisions are
+    // frequent enough to count: 4096 distinct grams expect
+    // C(4096, 2) / 2^20 ≈ 8 colliding pairs
+    val keys = (0 until 4096).map(i => graft.functions.Portable
+      .md5Hash64Jvm(s"gram $i") >>> 40)
+    val pairs = keys.groupBy(identity).values.map(g => g.size.toLong * (g.size - 1) / 2).sum
+    val expected = 4096.0 * 4095 / 2 / math.pow(2, 20)
+    assert(pairs >= 1 && pairs <= 3 * expected, s"$pairs colliding pairs, expected ≈ $expected")
+    // the fixture itself: every distinct word 3-gram has its own key
+    val grams = graft.operators.Silver.tables.find(_.name == "word3grams").get
+      .build(spark, TestSpark.Sf001)
+    val Array(nS, nHs) = grams.agg(countDistinct($"s"), countDistinct($"hs"))
+      .head().toSeq.map(_.asInstanceOf[Long]).toArray
+    assert(nS === nHs)
+  }
 }

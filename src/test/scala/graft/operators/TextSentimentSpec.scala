@@ -39,6 +39,18 @@ class TextSentimentSpec extends AnyFunSuite {
       Seq(200000L, 100000L, 0L))
   }
 
+  test("q31 lexicon lookup: ANSI on gives the ANSI-off result (absent tokens score 0)") {
+    def q31(ansi: Boolean): Seq[String] = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      graft.SparkEntry.queries("q31_sentiment_score")(s, TestSpark.Sf001)
+        .collect().map(_.toString).toSeq.sorted
+    }
+    val on = q31(ansi = true)
+    assert(on.nonEmpty)
+    assert(on === q31(ansi = false))
+  }
+
   test("sentiment negation flips and damps by -0.74 (VADER N_SCALAR)") {
     val df = Seq(
       "good",           // 190000
