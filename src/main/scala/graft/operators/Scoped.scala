@@ -22,15 +22,17 @@ import java.nio.file.Files
   */
 private[graft] object Scoped {
 
-  // Every temp dir this object creates is registered here and deleted on
-  // JVM shutdown — a long-lived session would otherwise accumulate one
-  // parquet copy per materialized scope on local disk for its whole life.
+  // Every scratch dir the engine creates (materialize and shared tables,
+  // stream outputs, checkpoints, replay feeds) is registered here and
+  // deleted on JVM shutdown, or earlier through `dropTempDir` — a
+  // long-lived session would otherwise accumulate one parquet copy per
+  // materialized scope on local disk for its whole life.
   // (At cluster scale these would be managed silver tables with a
   // retention policy; the shutdown hook is the in-process analog.)
   private val tempDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  private def newTempDir(prefix: String): String = {
+  private[graft] def newTempDir(prefix: String): String = {
     val dir = Files.createTempDirectory(prefix).toString
     tempDirs.add(dir)
     dir
@@ -44,30 +46,16 @@ private[graft] object Scoped {
         .foreach(Files.deleteIfExists(_))
     } catch { case _: Exception => () } // best-effort cleanup
 
+  /** Delete a registered temp dir now instead of at JVM exit. */
+  private[graft] def dropTempDir(d: String): Unit = {
+    tempDirs.remove(d)
+    deleteDir(d)
+  }
+
   sys.addShutdownHook(tempDirs.forEach(deleteDir(_)))
-
-  /** Debug hook: the executed plan of the most recent [[materialize]]
-    * INPUT — the plan the materialization boundary would otherwise hide
-    * behind a FileScan. PlanSpec asserts pre-write plan shape through
-    * this; never read on a production path. Captured as a THUNK so
-    * production calls never pay the extra plan pass and rendering.
-    */
-  @volatile private var lastMaterializedPlanThunk: () => String = () => ""
-  private[graft] def lastMaterializedPlan: String = lastMaterializedPlanThunk()
-
-  /** Audit hook: when installed (WindowBoundsSpec), sees the OPTIMIZED
-    * logical plan of every materialize input and every shared build —
-    * the plans the parquet round-trip otherwise hides behind a FileScan,
-    * which is where most of the engine's window operators live. Never
-    * installed on a production path.
-    */
-  @volatile private[graft] var planAudit:
-      Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit] = None
 
   def materialize(persisted: DataFrame*)(result: DataFrame): DataFrame = {
     val spark = result.sparkSession
-    planAudit.foreach(_(result.queryExecution.optimizedPlan))
-    lastMaterializedPlanThunk = () => result.queryExecution.executedPlan.toString
     val out = newTempDir("graft_mat_")
     result.write.mode("overwrite").parquet(out)
     persisted.foreach(_.unpersist())
@@ -101,9 +89,8 @@ private[graft] object Scoped {
   private val sharedPaths = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.types.StructType)]()
 
-  /** Every key a shared build has run for this session — the audit trail
-    * SilverRegistrySpec checks against the declared [[Silver]] registry,
-    * so a new Scoped.shared call site cannot ship undeclared.
+  /** Every key a shared build has run for this session (servebench's
+    * dashboard counts silver misses off it).
     */
   private val built =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -123,7 +110,6 @@ private[graft] object Scoped {
     if (table == null) {
       built.add(key)
       val (persisted, result) = build
-      planAudit.foreach(_(result.queryExecution.optimizedPlan))
       // embed the logical name in the dir so plans/listings show WHICH
       // derived table a scan reads (the slug drops the input-dir path)
       val slug = key.takeWhile(_ != ':').replaceAll("[^A-Za-z0-9_]", "_")
@@ -132,15 +118,17 @@ private[graft] object Scoped {
       persisted.foreach(_.unpersist())
       val prev = sharedPaths.putIfAbsent(key, (out, result.schema))
       table = if (prev == null) (out, result.schema) else {
-        tempDirs.remove(out)
-        deleteDir(out)
+        dropTempDir(out)
         prev
       }
     }
     Parquet.read(spark, table._1, Some(table._2))
   }
 
-  /** Drop every cached derived table (next caller rebuilds). For tests and
-    * for callers that know an input dir changed under its path. */
-  def invalidate(): Unit = sharedPaths.clear()
+  /** Drop every cached derived table and delete its dir (next caller
+    * rebuilds). For tests and for callers that know an input dir changed
+    * under its path; a frame still reading a dropped table fails. */
+  def invalidate(): Unit = sharedPaths.keySet.forEach { k =>
+    Option(sharedPaths.remove(k)).foreach(t => dropTempDir(t._1))
+  }
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule}
+import graft.operators.Scoped
 import graft.sources.{Parquet, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Structured Streaming layer (SURVEY.md §2.10 T1–T6, §3.1/§3.2): the
   * reference's Kafka micro-batch pipelines re-built on the file source so
@@ -93,15 +93,6 @@ object Streams extends QueryModule {
         $"event_type", $"post_count", $"total_score", $"max_score")
   }
 
-  /** Final state-store census of the most recent [[runToParquet]] run:
-    * Σ numRowsTotal over the query's stateful operators at termination.
-    * −1 = no progress was recorded. StateBoundsSpec reads this to check
-    * every streaming query's MEASURED end-state against the bound
-    * declared in [[StateBounds]] — the stateful twin of the
-    * WindowBounds plan audit. Never read on a production path.
-    */
-  @volatile private[graft] var lastStateRows: Long = -1L
-
   /** Feed memo (r13 optimization) — the [[graft.operators.Scoped]]
     * discipline applied to replay feeds: a feed is a DETERMINISTIC
     * function of (source plan, key column, chunk count) — five Series
@@ -184,7 +175,7 @@ object Streams extends QueryModule {
       df: DataFrame, keyCol: String, nChunks: Int,
       sortedKeyLits: Array[Column]): String = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    val feed = Files.createTempDirectory("graft_replay_feed_").toString
+    val feed = Scoped.newTempDir("graft_replay_feed_")
     if (sortedKeyLits.isEmpty) return feed // empty source ⇒ empty feed
     val per = math.max(1, math.ceil(sortedKeyLits.length.toDouble / nChunks).toInt)
     // upper bound (inclusive) of each chunk's contiguous key range
@@ -221,11 +212,15 @@ object Streams extends QueryModule {
     * `MemoryStream`/memory sinks survive only inside StreamingSpec.
     * "complete" mode re-emits the full result each micro-batch ⇒ overwrite
     * per batch; "append"/"update" emit deltas ⇒ append per batch.
+    * Scratch dirs follow one policy: the checkpoint dies with the query,
+    * the output dir (read by the returned frame) lives until JVM exit in
+    * [[Scoped]]'s temp-dir registry, like the replay feeds.
     */
   private[graft] def runToParquet(df: DataFrame, mode: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val spark = df.sparkSession
-    val out = Files.createTempDirectory("graft_stream_out_").toString
+    val out = Scoped.newTempDir("graft_stream_out_")
+    val ckpt = Scoped.newTempDir("graft_stream_ckpt_")
     val saveMode = if (mode == "complete") "overwrite" else "append"
     val q = df.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -253,13 +248,10 @@ object Streams extends QueryModule {
       }
       .outputMode(mode)
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft_stream_ckpt_").toString)
+      .option("checkpointLocation", ckpt)
       .start()
-    q.awaitTermination()
-    lastStateRows = Option(q.lastProgress)
-      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    q.stop()
+    try q.awaitTermination()
+    finally { q.stop(); Scoped.dropTempDir(ckpt) }
     // a stream that yielded no rows wrote no files — return an empty frame
     // with the stream's schema instead of letting parquet schema inference
     // throw on the empty directory
@@ -329,7 +321,8 @@ object Streams extends QueryModule {
       val spark = streamSession(outer)
       import spark.implicits._
       import org.apache.spark.sql.streaming.Trigger
-      val out = Files.createTempDirectory("graft_bronze_").toString
+      val out = Scoped.newTempDir("graft_bronze_")
+      val ckpt = Scoped.newTempDir("graft_ckpt_")
       val q = eventsStream(spark, dir).writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("append").parquet(out)
@@ -337,11 +330,11 @@ object Streams extends QueryModule {
         // T3/T4: explicit trigger + checkpointed progress, as the
         // reference configures per query (reddit_pipeline.py:148-149)
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft_ckpt_").toString)
+        .option("checkpointLocation", ckpt)
         .start()
-      q.awaitTermination() // AvailableNow terminates when caught up
-      q.stop()
+      // AvailableNow terminates when caught up
+      try q.awaitTermination()
+      finally { q.stop(); Scoped.dropTempDir(ckpt) }
       // plain inference: reading the sunk bronze files back is the test
       spark.read.parquet(out)
         .groupBy($"event_type")

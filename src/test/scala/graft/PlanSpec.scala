@@ -17,6 +17,15 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Every plan Scoped.materialize wrote while the query built (read off
+    * the listener bus), each as the initial physical plan of the write's
+    * input — the pre-write plans the FileScan boundary would otherwise
+    * hide.
+    */
+  private def materializedPlanOf(name: String): String =
+    PlanRecorder.record(SparkEntry.queries(name)(spark, TestSpark.Sf001))._2
+      .materialized.flatMap(_.replannedInput).mkString("\n")
+
   test("q10: filters push down into the parquet scan") {
     val p = planOf("q10_range_filter")
     assert(p.contains("PushedFilters: [IsNotNull"), p.linesIterator.take(20).mkString("\n"))
@@ -70,7 +79,8 @@ class PlanSpec extends AnyFunSuite {
       // BUILD plans are asserted in the dedicated df-window test above
       "q190_postings_size", "q191_allpairs_cosine")
     SparkEntry.queries.keys.filterNot(eager).foreach { name =>
-      assert(!planOf(name).contains("CartesianProduct"), s"$name is cartesian")
+      assert(!PlanCensus.builds(name).physical.get.contains("CartesianProduct"),
+        s"$name is cartesian")
     }
   }
 
@@ -222,11 +232,8 @@ class PlanSpec extends AnyFunSuite {
   test("q118: substring dedup shuffles 8-byte gram keys, no cartesian") {
     // every plan materialized during the q118 build, not whichever
     // materialize ran last
-    val built = collection.mutable.ArrayBuffer.empty[String]
-    graft.operators.Scoped.planAudit =
-      Some(lp => built.synchronized { built += lp.toString })
-    val p = try planOf("q118_substring_dedup")
-      finally graft.operators.Scoped.planAudit = None
+    val (p, rec) = PlanRecorder.record(planOf("q118_substring_dedup"))
+    val built = rec.materialized.flatMap(_.replannedInput)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p.take(1200))
     // the occurrence count groups on the md5 gram hash, not the gram
@@ -401,10 +408,9 @@ class PlanSpec extends AnyFunSuite {
     // asserts the physical operator actually appears for the two shapes
     // that rely on it: latest-per-key (q08) and grouped top-k (q39).
     Seq("q08_latest_per_key", "q39_knn_brute").foreach { q =>
-      val df = SparkEntry.queries(q)(spark, TestSpark.Sf001)
       val p =
-        if (q == "q39_knn_brute") graft.operators.Scoped.lastMaterializedPlan
-        else df.queryExecution.executedPlan.toString
+        if (q == "q39_knn_brute") materializedPlanOf(q)
+        else planOf(q)
       assert(p.contains("WindowGroupLimit"),
         s"$q lost its group-limit prune:\n" + p.linesIterator.take(25).mkString("\n"))
     }
@@ -415,8 +421,7 @@ class PlanSpec extends AnyFunSuite {
     // JOIN instead of collect_set OVER (PARTITION BY ckey), so no task
     // ever buffers a whole duplicate group — the attach join may shuffle
     // (skew-splittable), a window may not
-    SparkEntry.queries("q164_unicode_cleanup")(spark, TestSpark.Sf001)
-    val p = graft.operators.Scoped.lastMaterializedPlan
+    val p = materializedPlanOf("q164_unicode_cleanup")
     assert(!p.contains("Window"), "q164 re-grew a dup-group window:\n" +
       p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"), p)
@@ -452,8 +457,7 @@ class PlanSpec extends AnyFunSuite {
     // materialized since r9 (pool'd RRF): pre-write plan still carries
     // the broadcast df/corpus joins, and each ranker's rank window must
     // sit above a TakeOrdered/Limit pool cut, never the raw matched set
-    SparkEntry.queries("q177_rrf_hybrid")(spark, TestSpark.Sf001)
-    val p = graft.operators.Scoped.lastMaterializedPlan
+    val p = materializedPlanOf("q177_rrf_hybrid")
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("TakeOrderedAndProject"),
@@ -504,15 +508,6 @@ class PlanSpec extends AnyFunSuite {
     // the running-sum window must be keyed (hashpartitioning on day),
     // not a single-partition global window (Exchange SinglePartition)
     assert(p.contains("hashpartitioning(day"), p.linesIterator.take(30).mkString("\n"))
-  }
-
-  /** Plan of a query whose last step is Scoped.materialize: running the
-    * builder triggers the write, and the hook holds the pre-write plan
-    * the FileScan boundary would otherwise hide.
-    */
-  private def materializedPlanOf(name: String): String = {
-    SparkEntry.queries(name)(spark, TestSpark.Sf001)
-    graft.operators.Scoped.lastMaterializedPlan
   }
 
   test("q204: PQ codes and ADC LUT join broadcast — the corpus never shuffles by distance") {

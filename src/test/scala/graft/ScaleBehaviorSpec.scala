@@ -281,7 +281,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       // (a) the chunking law: no running-state window partition — a
       // (tkr, day, _pid) cell — holds more than a balanced share, and
       // the hot symbol-day REALLY splits across chunks
-      val flow = Series.flowFromTape(tape)
+      val (flow, rec) = PlanRecorder.record(Series.flowFromTape(tape))
       val cells = flow.groupBy($"tkr", $"day", $"_pid")
         .agg(count(lit(1)).as("rows")).collect()
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -319,8 +319,10 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       val plan = flow.queryExecution.executedPlan.toString
       assert(plan.contains("Scan ExistingRDD"),
         plan.linesIterator.take(30).mkString("\n"))
-      assert(Series.lastChunkInputPlan.contains("rangepartitioning"),
-        Series.lastChunkInputPlan.linesIterator.take(30).mkString("\n"))
+      val chunkInput = rec.executions.filter(_.name.contains("localCheckpoint"))
+        .map(_.qe.executedPlan.toString).mkString("\n")
+      assert(chunkInput.contains("rangepartitioning"),
+        chunkInput.linesIterator.take(30).mkString("\n"))
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

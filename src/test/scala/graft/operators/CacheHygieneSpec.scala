@@ -34,4 +34,22 @@ class CacheHygieneSpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persistent RDD ids: $leaked")
   }
+
+  test("invalidate deletes every dropped shared dir; the next read rebuilds") {
+    var builds = 0
+    def read() = Scoped.shared(spark, "invalidate_probe") {
+      builds += 1
+      (Nil, spark.range(3).toDF("id"))
+    }
+    def dirOf(df: org.apache.spark.sql.DataFrame) =
+      new java.io.File(new java.net.URI(df.inputFiles.head)).getParentFile
+    val first = dirOf(read())
+    assert(builds === 1 && first.isDirectory)
+    Scoped.invalidate()
+    assert(!first.exists(), s"$first survived invalidate()")
+    val second = read()
+    assert(builds === 2 && second.count() === 3L)
+    assert(dirOf(second) != first)
+    Scoped.invalidate()
+  }
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import graft.{SparkEntry, TestSpark}
-import graft.operators.{Scoped, Silver}
-import org.apache.spark.sql.DataFrame
+import graft.{PlanCensus, SparkEntry, TestSpark}
+import graft.operators.Silver
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BinaryComparison, EqualNullSafe, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -230,47 +229,31 @@ class JoinFanoutSpec extends AnyFunSuite with PredicateHelper {
     plan.collectWithSubqueries { case j: Join => classify(j) }.flatten
 
   test("every multiplying join across the full query surface is declared bounded") {
-    val builders: Seq[(String, () => DataFrame)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-        n -> (() => fn(spark, TestSpark.Sf001))
-      } ++ Silver.tables.map(t =>
-        s"silver:${t.name}" -> (() => t.build(spark, TestSpark.Sf001)))
-
     val undeclared = mutable.SortedMap.empty[String, mutable.ListBuffer[Hazard]]
     val keyMismatch = mutable.ListBuffer.empty[String]
-    val buildErrors = mutable.ListBuffer.empty[String]
+    val buildErrors = PlanCensus.buildErrors
     val hazardQueries = mutable.SortedSet.empty[String]
 
-    // rebuild shared silvers under the audit hook so pre-materialization
-    // plans (where the pair joins live) are walked too — the
-    // WindowBoundsSpec discipline
-    Scoped.invalidate()
-    builders.foreach { case (name, mk) =>
-      try {
-        val audited = mutable.ListBuffer.empty[LogicalPlan]
-        Scoped.planAudit = Some(p => audited.synchronized { audited += p })
-        val top = try mk().queryExecution.optimizedPlan
-          finally Scoped.planAudit = None
-        val hs = (audited.toList :+ top).flatMap(hazards)
-        if (hs.nonEmpty) {
-          hazardQueries += name
-          val sites = JoinFanoutBounds.sitesFor(name)
-          if (sites.isEmpty) {
-            undeclared.getOrElseUpdate(name, mutable.ListBuffer.empty) ++= hs
-          } else {
-            // every declared blocking key must appear among SOME hazard
-            // join's equi keys (empty blockKeys = declared cartesian)
-            val allEqui = hs.flatMap(_.equiKeyNames).toSet
-            sites.foreach { s =>
-              val missing = s.blockKeys.filterNot(allEqui.contains)
-              if (missing.nonEmpty)
-                keyMismatch += s"$name: declared blockKeys ${missing.mkString(",")}" +
-                  s" not among plan equi keys ${allEqui.toSeq.sorted.mkString(",")}"
-            }
+    // every query, then every Silver build, each with its
+    // pre-materialization plans (where the pair joins live)
+    PlanCensus.attributed(PlanCensus.queriesFirst).foreach { case (name, plans) =>
+      val hs = plans.flatMap(hazards)
+      if (hs.nonEmpty) {
+        hazardQueries += name
+        val sites = JoinFanoutBounds.sitesFor(name)
+        if (sites.isEmpty) {
+          undeclared.getOrElseUpdate(name, mutable.ListBuffer.empty) ++= hs
+        } else {
+          // every declared blocking key must appear among SOME hazard
+          // join's equi keys (empty blockKeys = declared cartesian)
+          val allEqui = hs.flatMap(_.equiKeyNames).toSet
+          sites.foreach { s =>
+            val missing = s.blockKeys.filterNot(allEqui.contains)
+            if (missing.nonEmpty)
+              keyMismatch += s"$name: declared blockKeys ${missing.mkString(",")}" +
+                s" not among plan equi keys ${allEqui.toSeq.sorted.mkString(",")}"
           }
         }
-      } catch {
-        case e: Throwable => buildErrors += s"$name: ${e.getMessage}"
       }
     }
 

@@ -1,8 +1,6 @@
 package graft.plans
 
-import graft.{SparkEntry, TestSpark}
-import graft.operators.{Scoped, Silver}
-import org.apache.spark.sql.DataFrame
+import graft.{PlanCensus, TestSpark}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, ExprId}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow, WindowGroupLimit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -94,50 +92,32 @@ class WindowBoundsSpec extends AnyFunSuite {
   }
 
   test("every window partition key set across the full query surface is declared bounded") {
-    // name -> builder, over BOTH registries the engine plans windows in
-    val builders: Seq[(String, () => DataFrame)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-        n -> (() => fn(spark, TestSpark.Sf001))
-      } ++ Silver.tables.map(t =>
-        s"silver:${t.name}" -> (() => t.build(spark, TestSpark.Sf001)))
-
     val undeclared = mutable.SortedMap.empty[String, mutable.SortedSet[String]]
     val unexemptGlobal = mutable.SortedSet.empty[String]
     val tickerNoEvidence = mutable.SortedSet.empty[String]
-    val buildErrors = mutable.ListBuffer.empty[String]
+    // a query that cannot BUILD is a correctness-gate problem, not a
+    // window-bound problem — it is reported next to the full undeclared
+    // listing instead of stopping the spec at the first one
+    val buildErrors = PlanCensus.buildErrors
 
-    // the parquet boundary in Scoped.materialize / Scoped.shared hides
-    // pre-write plans behind a FileScan — and that is where most windows
-    // live. Rebuild every shared table under the audit hook so their
-    // plans (and every materialize input's) are walked too.
-    Scoped.invalidate()
-    builders.foreach { case (name, mk) =>
-      try {
-        val audited = mutable.ListBuffer.empty[LogicalPlan]
-        Scoped.planAudit = Some(p => audited.synchronized { audited += p })
-        val top = try mk().queryExecution.optimizedPlan
-          finally Scoped.planAudit = None
-        (audited.toList :+ top).flatMap(windowKeySets).foreach {
-          case (keys, w) =>
-            if (keys.isEmpty) {
-              if (!WindowBounds.globalWindowExempt.contains(name))
-                unexemptGlobal += name
-            } else if (!WindowBounds.isBounded(keys)) {
-              undeclared.getOrElseUpdate(keys.mkString(", "),
-                mutable.SortedSet.empty[String]) += name
-            } else if (keys.contains("ticker") &&
-                !keys.exists(Set("_pid", "cu", "chunk")) &&
-                !tickerRollupEvidence(w.child)) {
-              // the ticker declaration is rollup-grain ONLY — a window
-              // that rides it must show the rollup in its own subtree
-              tickerNoEvidence += name
-            }
+    // both registries the engine plans windows in (queries, then Silver),
+    // each with the plans the parquet boundary in Scoped.materialize /
+    // Scoped.shared hides behind a FileScan — where most windows live
+    PlanCensus.attributed(PlanCensus.queriesFirst).foreach { case (name, plans) =>
+      plans.flatMap(windowKeySets).foreach { case (keys, w) =>
+        if (keys.isEmpty) {
+          if (!WindowBounds.globalWindowExempt.contains(name))
+            unexemptGlobal += name
+        } else if (!WindowBounds.isBounded(keys)) {
+          undeclared.getOrElseUpdate(keys.mkString(", "),
+            mutable.SortedSet.empty[String]) += name
+        } else if (keys.contains("ticker") &&
+            !keys.exists(Set("_pid", "cu", "chunk")) &&
+            !tickerRollupEvidence(w.child)) {
+          // the ticker declaration is rollup-grain ONLY — a window
+          // that rides it must show the rollup in its own subtree
+          tickerNoEvidence += name
         }
-      } catch {
-        // a query that cannot BUILD is a correctness-gate problem, not a
-        // window-bound problem — record it so this spec still reports
-        // the full undeclared listing instead of dying on the first one
-        case e: Throwable => buildErrors += s"$name: ${e.getMessage}"
       }
     }
 

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import graft.{SparkEntry, TestSpark}
+import graft.{PlanRecorder, SparkEntry, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming-state census CI: every declared StateBound re-runs its
   * query on the fixture and asserts the MEASURED final state rows
-  * (Streams.lastStateRows, read off the query's last progress) sit
+  * (Σ numRowsTotal of the query's last streaming progress, recorded off
+  * the listener bus by PlanRecorder) sit
   * within the declared limit recomputed from the input tables — the
   * WindowBounds discipline applied to the other unbounded-growth class.
   * Coverage: every stateful streaming query in the surface must carry a
@@ -41,9 +42,8 @@ class StateBoundsSpec extends AnyFunSuite {
 
   test("measured final state rows respect every declared bound") {
     val failures = StateBounds.declared.flatMap { sb =>
-      Streams.lastStateRows = -1L
-      SparkEntry.queries(sb.query)(spark, dir).collect()
-      val measured = Streams.lastStateRows
+      val measured = PlanRecorder.record(
+        SparkEntry.queries(sb.query)(spark, dir).collect())._2.stateRows
       val limit = sb.limit(spark, dir)
       // a stateless query reports no stateOperators rows (census 0)
       if (measured < 0) Some(s"${sb.query}: no progress recorded")
@@ -64,9 +64,9 @@ class StateBoundsSpec extends AnyFunSuite {
         "q235_stream_dollar_bars" -> StateBounds.declared
           .find(_.query == "q235_stream_dollar_bars").get)
       .foreach { case (n, sb) =>
-        Streams.lastStateRows = -1L
-        SparkEntry.queries(n)(spark, dir).collect()
-        assert(Streams.lastStateRows === sb.limit(spark, dir), n)
+        val measured = PlanRecorder.record(
+          SparkEntry.queries(n)(spark, dir).collect())._2.stateRows
+        assert(measured === sb.limit(spark, dir), n)
       }
   }
 }

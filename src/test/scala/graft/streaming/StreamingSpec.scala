@@ -455,4 +455,17 @@ class StreamingSpec extends AnyFunSuite {
     assert(Streams.replayFeed(src(spark.newSession()), "m", 2) === first)
     assert(Streams.replayFeed(src(spark), "m", 3) !== first)
   }
+
+  test("a stopped stream's checkpoint dir is deleted: repeated q41 runs leave none") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts = Option(tmp.list()).toSet.flatten
+      .filter(_.startsWith("graft_stream_ckpt_"))
+    val before = ckpts
+    (1 to 2).foreach { _ =>
+      graft.SparkEntry.queries("q41_stream_features_15m")(spark, TestSpark.Sf001)
+        .collect()
+    }
+    assert((ckpts -- before).isEmpty, s"left behind: ${ckpts -- before}")
+  }
 }
+
