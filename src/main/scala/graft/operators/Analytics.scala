@@ -428,7 +428,7 @@ object Analytics extends QueryModule {
   private[operators] def userScan(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Scoped.shared(spark, s"user_scan:$dir")(
+    Scoped.shared(spark, "user_scan", dir)(
       (Nil, chunkedUserScan(
         Tables.events(spark, dir)
           .filter($"ts".isNotNull)

@@ -329,7 +329,7 @@ object CoreBatch extends QueryModule {
     */
   private[operators] def dailyEvents(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"daily_events:$dir")({
+    Scoped.shared(spark, "daily_events", dir)({
       import spark.implicits._
       (Nil, Tables.events(spark, dir)
         .filter($"ts".isNotNull)

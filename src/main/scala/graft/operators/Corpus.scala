@@ -197,7 +197,7 @@ object Corpus extends QueryModule {
     */
   private[operators] def kmeansCentroids(
       spark: SparkSession, dir: String, iters: Int): DataFrame =
-    Scoped.shared(spark, s"kmeans_cents_$iters:$dir")((Nil,
+    Scoped.shared(spark, s"kmeans_cents_$iters", dir)((Nil,
       trainCentroids(embScaled(spark, dir), localK(spark, dir), iters)))
 
   /** Seed + `iters` Lloyd's passes over an arbitrary (vec_id, xs) frame

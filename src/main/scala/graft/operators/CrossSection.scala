@@ -65,7 +65,7 @@ object CrossSection extends QueryModule {
   // deterministic under any partitioning.
   // ---------------------------------------------------------------------
   private[operators] def mbars(spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"monthly_bars:$dir")((Nil, mbarsBuild(spark, dir)))
+    Scoped.shared(spark, "monthly_bars", dir)((Nil, mbarsBuild(spark, dir)))
 
   private def mbarsBuild(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -529,7 +529,7 @@ object Curation extends QueryModule {
     */
   private[operators] def sourceTokens(
       spark: org.apache.spark.sql.SparkSession, dir: String) =
-    Scoped.shared(spark, s"source_tokens:$dir")({
+    Scoped.shared(spark, "source_tokens", dir)({
       import spark.implicits._
       (Nil, Tables.documents(spark, dir)
         .groupBy($"source")

@@ -97,7 +97,7 @@ object Dedup extends QueryModule {
     * survivor set directly.
     */
   private[operators] def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"minhash_pairs:$dir")(buildPairs(spark, dir))
+    Scoped.shared(spark, "minhash_pairs", dir)(buildPairs(spark, dir))
 
   private def buildPairs(spark: SparkSession, dir: String): (Seq[DataFrame], DataFrame) = {
       import spark.implicits._
@@ -364,7 +364,7 @@ object Dedup extends QueryModule {
     * parquet (silver-table pattern, same as the minhash pair table).
     */
   private[operators] def word3grams(spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"word3grams:$dir")({
+    Scoped.shared(spark, "word3grams", dir)({
       import spark.implicits._
       val grams = Tables.documents(spark, dir)
         .withColumn("w", Portable.tokens($"text"))

@@ -288,7 +288,7 @@ object Extras extends QueryModule {
     */
   private[operators] def dailyWideCents(
       spark: org.apache.spark.sql.SparkSession, dir: String) =
-    Scoped.shared(spark, s"daily_wide_cents:$dir")({
+    Scoped.shared(spark, "daily_wide_cents", dir)({
       import spark.implicits._
       (Nil, Tables.events(spark, dir)
         .filter($"ts".isNotNull)

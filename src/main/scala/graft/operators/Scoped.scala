@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.sources.Parquet
-import org.apache.spark.sql.DataFrame
+import graft.sources.{Memo, Parquet}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
 
 /** Cache-lifetime hygiene for query builders that persist intermediates.
@@ -62,7 +63,7 @@ private[graft] object Scoped {
     Parquet.read(spark, out, Some(result.schema))
   }
 
-  /** Materialized DERIVED TABLE, built once per (key) per session.
+  /** Materialized DERIVED TABLE, built once per (name, dir) and input version.
     *
     * Several queries consume the same expensive intermediate (the verified
     * MinHash pair table feeds q35, the curation funnel and the cluster
@@ -78,16 +79,12 @@ private[graft] object Scoped {
     * re-reads the parquet through [[graft.sources.Parquet.read]] with that
     * schema — a warm read starts no Spark job (no footer inference).
     *
-    * ASSUMES IMMUTABLE INPUTS for the life of the session: the cache keys
-    * on the logical name (which embeds the input dir path), so if the
-    * files under that path are rewritten the cached derivation is stale.
-    * That matches the fixture contract (driver-generated parquet, never
-    * mutated); a deployment with mutable inputs would key on a content
-    * fingerprint (e.g. max modification time + file count) instead —
-    * call `invalidate()` to drop the cache explicitly.
+    * The table is a [[Memo]] entry keyed `name:dir` (plain `name` for a
+    * table with no input dir) at the dir's [[Parquet.inputVersion]]: a
+    * file rewritten under `dir` rebuilds the table on its next read and
+    * deletes the superseded dir.
     */
-  private val sharedPaths = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+  private val tables = new Memo[(String, StructType)](t => dropTempDir(t._1))
 
   /** Every key a shared build has run for this session (servebench's
     * dashboard counts silver misses off it).
@@ -99,36 +96,25 @@ private[graft] object Scoped {
     built.asScala.toSet
   }
 
-  def shared(spark: org.apache.spark.sql.SparkSession, key: String)(
+  def shared(spark: SparkSession, name: String, dir: String = "")(
       build: => (Seq[DataFrame], DataFrame)): DataFrame = {
-    // NOT computeIfAbsent: derived tables nest (the global-rn build reads
-    // the bars table), and a nested computeIfAbsent on the same map is a
-    // recursive-update error. A lost race just builds twice into separate
-    // temp dirs; the loser deletes its own dir at once and reads the
-    // winner's.
-    var table = sharedPaths.get(key)
-    if (table == null) {
+    val key = if (dir.isEmpty) name else s"$name:$dir"
+    val version = if (dir.isEmpty) "" else Parquet.inputVersion(spark, Seq(dir))
+    val (path, schema) = tables(key, version) {
       built.add(key)
       val (persisted, result) = build
       // embed the logical name in the dir so plans/listings show WHICH
-      // derived table a scan reads (the slug drops the input-dir path)
-      val slug = key.takeWhile(_ != ':').replaceAll("[^A-Za-z0-9_]", "_")
-      val out = newTempDir(s"graft_shared_${slug}_")
+      // derived table a scan reads
+      val out = newTempDir(s"graft_shared_${name.replaceAll("[^A-Za-z0-9_]", "_")}_")
       result.write.mode("overwrite").parquet(out)
       persisted.foreach(_.unpersist())
-      val prev = sharedPaths.putIfAbsent(key, (out, result.schema))
-      table = if (prev == null) (out, result.schema) else {
-        dropTempDir(out)
-        prev
-      }
+      (out, result.schema)
     }
-    Parquet.read(spark, table._1, Some(table._2))
+    Parquet.read(spark, path, Some(schema))
   }
 
-  /** Drop every cached derived table and delete its dir (next caller
-    * rebuilds). For tests and for callers that know an input dir changed
-    * under its path; a frame still reading a dropped table fails. */
-  def invalidate(): Unit = sharedPaths.keySet.forEach { k =>
-    Option(sharedPaths.remove(k)).foreach(t => dropTempDir(t._1))
-  }
+  /** Clear every memo: derived tables and replay feeds are dropped and
+    * their dirs deleted (the next caller rebuilds); a frame still reading
+    * a dropped table fails. */
+  def invalidate(): Unit = Memo.clearAll()
 }

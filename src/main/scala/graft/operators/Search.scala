@@ -49,7 +49,7 @@ object Search extends QueryModule {
     */
   private[operators] def queryPostings(
       spark: org.apache.spark.sql.SparkSession, dir: String) =
-    Scoped.shared(spark, s"query_postings:$dir")({
+    Scoped.shared(spark, "query_postings", dir)({
       import spark.implicits._
       val postings = Tables.documents(spark, dir)
         .select($"doc_id", explode(Portable.tokens(lower($"text"))).as("term"))
@@ -368,7 +368,7 @@ object Search extends QueryModule {
     */
   private[operators] def lmAllDocs(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    Scoped.shared(spark, s"lm_doc_bits:$dir")((Nil, lmAllDocsBuild(spark, dir)))
+    Scoped.shared(spark, "lm_doc_bits", dir)((Nil, lmAllDocsBuild(spark, dir)))
 
   private[graft] def lmAllDocsBuild(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
@@ -542,7 +542,7 @@ object Search extends QueryModule {
     * rank iterations (and any future graph query) via Scoped.shared.
     */
   private[operators] def textrankEdges(spark: org.apache.spark.sql.SparkSession, dir: String) =
-    Scoped.shared(spark, s"textrank_edges:$dir")((Nil, {
+    Scoped.shared(spark, "textrank_edges", dir)((Nil, {
       import spark.implicits._
       val toks = Tables.documents(spark, dir)
         .withColumn("w", regexp_extract_all(lower($"text"), lit("[a-z]{3,}"), lit(0)))
@@ -1065,7 +1065,7 @@ object Search extends QueryModule {
     */
   private[graft] def tfidfPostings(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"tfidf_postings:$dir")({
+    Scoped.shared(spark, "tfidf_postings", dir)({
       import spark.implicits._
       val postings = Tables.documents(spark, dir)
         .select($"doc_id", Portable.tokens(lower($"text")).as("w"))

@@ -957,7 +957,7 @@ object Series extends QueryModule {
     */
   private[operators] def flowResolved(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"classified_flow:$dir")(
+    Scoped.shared(spark, "classified_flow", dir)(
       (Nil, flowFromTape(tickTape(spark, dir))))
 
   /** The q230/q238 shared oracle CTE chain: ticks → w1 (lag + cumsum) →

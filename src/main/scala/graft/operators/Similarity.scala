@@ -790,7 +790,7 @@ object Similarity extends QueryModule {
     */
   private[operators] def pqCodebooks(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"pq_codebooks:$dir")((Nil, {
+    Scoped.shared(spark, "pq_codebooks", dir)((Nil, {
       import spark.implicits._
       val emb = Corpus.embScaled(spark, dir)
       (0 until PqM).map { m =>

@@ -297,7 +297,7 @@ object TextOps extends QueryModule {
     */
   private[operators] def wordCounts(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"word_counts:$dir")({
+    Scoped.shared(spark, "word_counts", dir)({
       import spark.implicits._
       (Nil, Tables.documents(spark, dir)
         .select(explode(Portable.tokens(lower($"text"))).as("w"))
@@ -440,17 +440,16 @@ object TextOps extends QueryModule {
     */
   private type BpeMerge = (Long, String, String, String, Long, Long)
 
-  // driver-side memo of the trained merge table per corpus dir — the
-  // artifact is ~20 tiny rows of model state (the Scoped.shared
-  // discipline, but the value is driver-resident like the k-means
-  // seeds); q117 emits it and q119 applies it without retraining
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[BpeMerge]]()
+  // driver-side memo of the trained merge table per corpus dir and input
+  // version — the artifact is ~20 tiny rows of model state (the
+  // Scoped.shared discipline, but the value is driver-resident like the
+  // k-means seeds); q117 emits it and q119 applies it without retraining
+  private val bpeTables = new graft.sources.Memo[Seq[BpeMerge]]()
 
   /** Train the BPE merge table on `dir`'s corpus (see q117 comment). */
   private[operators] def trainBpe(
       spark: SparkSession, dir: String): Seq[BpeMerge] =
-    bpeCache.computeIfAbsent(dir, _ => {
+    bpeTables(dir, graft.sources.Parquet.inputVersion(spark, Seq(dir))) {
       import spark.implicits._
       val sc = spark.sparkContext
       val cachedBefore = sc.getPersistentRDDs.keySet
@@ -497,7 +496,7 @@ object TextOps extends QueryModule {
       (sc.getPersistentRDDs.keySet -- cachedBefore).foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
       merges.toSeq
-    })
+    }
 
   /** The literal ' l r ' → ' lr ' merge, applied MergePasses times: the
     * replace consumes the shared delimiter space, so one pass can miss a
@@ -1009,7 +1008,7 @@ object TextOps extends QueryModule {
     */
   private[operators] def wordpieceVocab(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"wordpiece_vocab:$dir")({
+    Scoped.shared(spark, "wordpiece_vocab", dir)({
       import spark.implicits._
       // the corpus token-count pass comes from the word_counts silver
       // table (SharedSubtreeSpec promotion), not a private re-aggregation
@@ -1069,17 +1068,10 @@ object TextOps extends QueryModule {
     n
   }
 
-  /** Dir of the most recent q226 build this process ran — the deferred
-    * oracle reads the SAME materialized vocab back (builds always run
-    * before oracle dump in graft.Verify).
-    */
-  @volatile private var wpLastDir: String = _
-
   private val q226 = QueryDef.deferred(
     "q226_wordpiece_encode",
     (spark, dir) => {
       import spark.implicits._
-      wpLastDir = dir
       val vocab = wordpieceVocab(spark, dir)
         .select($"piece").as[String].collect().toSet
       val docWords = Tables.documents(spark, dir)
@@ -1100,14 +1092,12 @@ object TextOps extends QueryModule {
           $"fertility_milli")
         .orderBy($"doc_id")
     }) {
-      // DEFERRED oracle: embed the materialized vocab (read back through
-      // the silver parquet, not the in-process set) and replay the same
-      // greedy fold per DISTINCT word
+      // DEFERRED oracle: embed the vocab of the dir being dumped (read
+      // back through the silver parquet, not the in-process set) and
+      // replay the same greedy fold per DISTINCT word
       val spark = org.apache.spark.sql.SparkSession.active
-      val genDir =
-        if (wpLastDir != null) wpLastDir else graft.OracleContext.dir
-      require(genDir != null, "q226 oracle generated before any build")
-      val voc = wordpieceVocab(spark, genDir)
+      require(graft.OracleContext.dir != null, "q226 oracle needs OracleContext.dir")
+      val voc = wordpieceVocab(spark, graft.OracleContext.dir)
         .select(col("piece")).collect().map(_.getString(0)).sorted
         .map(p => "'" + p.replace("'", "''") + "'").mkString(",")
       def tryLen(l: Int): String =
@@ -1429,7 +1419,7 @@ object TextOps extends QueryModule {
     */
   private[operators] def sourceWordCounts(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"source_word_counts:$dir")({
+    Scoped.shared(spark, "source_word_counts", dir)({
       import spark.implicits._
       (Nil, Tables.documents(spark, dir)
         .select($"source", explode(Portable.tokens(lower($"text"))).as("w"))

@@ -36,7 +36,7 @@ object WindowFeatures extends QueryModule {
     // gold daily table is written once and read by every notebook —
     // build_training_dataset.py:70-79). Nine queries consume these rows;
     // build once per dir, read parquet after.
-    Scoped.shared(spark, s"daily_bars:$dir")((Nil, barsBuild(spark, dir)))
+    Scoped.shared(spark, "daily_bars", dir)((Nil, barsBuild(spark, dir)))
 
   private def barsBuild(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -225,7 +225,7 @@ object WindowFeatures extends QueryModule {
   private[operators] def withGlobalRn(spark: SparkSession, dir: String): DataFrame =
     // materialized derived table: both split queries (q22, q23) consume
     // the same numbered rows — build once per dir, read parquet after
-    Scoped.shared(spark, s"bars_global_rn:$dir")(globalRnBuild(spark, dir))
+    Scoped.shared(spark, "bars_global_rn", dir)(globalRnBuild(spark, dir))
 
   // ---------------------------------------------------------------------
   // q22 — sequential train/test split (M1): 80/20 by global row_number
@@ -854,7 +854,7 @@ object WindowFeatures extends QueryModule {
     */
   private[operators] def tripleBarrier(
       spark: SparkSession, dir: String): DataFrame =
-    Scoped.shared(spark, s"triple_barrier_labels:$dir")((Nil, {
+    Scoped.shared(spark, "triple_barrier_labels", dir)((Nil, {
       import spark.implicits._
       val b = bars(spark, dir)
         .withColumn("cents",

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.{QueryDef, QueryModule}
 import graft.operators.Scoped
-import graft.sources.{Parquet, Tables}
+import graft.sources.{Memo, Parquet, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,25 +93,15 @@ object Streams extends QueryModule {
         $"event_type", $"post_count", $"total_score", $"max_score")
   }
 
-  /** Feed memo (r13 optimization) — the [[graft.operators.Scoped]]
-    * discipline applied to replay feeds: a feed is a DETERMINISTIC
-    * function of (source plan, key column, chunk count) — five Series
-    * queries replay the identical 4-chunk tick tape, two WindowFeatures
-    * queries the identical bars feed, and the bench's warmup+2-pass
-    * protocol re-invokes every query three times — so the same feed was
-    * being rebuilt up to 15× per JVM. Keyed by the CANONICALIZED source
-    * plan (normalizes exprIds across the per-query cloned sessions,
-    * keeps the fixture path, so a different dir or a different source
-    * can never collide), the chunk count and the key column. Feed
-    * directories are plain files on disk, readable from any session;
-    * checkpoint/output dirs stay per-run, so reuse is transparent.
+  /** Replay feeds, one [[Memo]] entry per (canonical source plan, its
+    * sorted input files, key column, chunk count), versioned on those
+    * files: five Series queries replay the identical tick tape and two
+    * WindowFeatures queries the identical bars feed. The canonical plan
+    * normalizes exprIds across the per-query cloned sessions but renders
+    * a file relation without its path, hence the file list. Feed dirs are
+    * plain files, readable from any session.
     */
-  private val feedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def memoKey(df: DataFrame, keyCol: String, nChunks: Int): String =
-    s"$keyCol|$nChunks|" +
-      df.queryExecution.analyzed.canonicalized.toString
+  private val feeds = new Memo[String](Scoped.dropTempDir)
 
   /** Replay feed: write `df` as `nChunks` parquet files over contiguous
     * ranges of the distinct `keyCol` values, with STRICTLY INCREASING
@@ -120,15 +110,19 @@ object Streams extends QueryModule {
     * (market tapes, event days) or a long (doc ingestion, where the
     * natural arrival order is the id sequence). The distinct-key collect
     * is bounded driver model state (P12: ≤ |trading days| or ≤ |ids| of
-    * a dimension-sized table). Memoized per (plan, key, chunks); returns
-    * the feed directory.
+    * a dimension-sized table). Memoized per (plan, input files, key,
+    * chunks); returns the feed directory.
     */
   private[graft] def replayFeed(
-      df: DataFrame, keyCol: String, nChunks: Int): String =
-    feedMemo.computeIfAbsent(memoKey(df, keyCol, nChunks), _ =>
+      df: DataFrame, keyCol: String, nChunks: Int): String = {
+    val files = df.inputFiles.toSeq.sorted
+    feeds(s"$keyCol|$nChunks|${files.mkString(",")}|" +
+        df.queryExecution.analyzed.canonicalized,
+      Parquet.inputVersion(df.sparkSession, files))(
       writeChunkedFeed(df, keyCol, nChunks,
         df.select(col(keyCol)).distinct().orderBy(col(keyCol))
           .collect().map(r => lit(r.get(0)))))
+  }
 
   /** The replay harness of the stateful-replay queries: builds `src` on a
     * [[statefulSession]] clone, writes it as a [[replayFeed]] over

@@ -18,13 +18,15 @@ class PlanSpec extends AnyFunSuite {
   }
 
   /** Every plan Scoped.materialize wrote while the query built (read off
-    * the listener bus), each as the initial physical plan of the write's
-    * input — the pre-write plans the FileScan boundary would otherwise
-    * hide.
+    * the listener bus), in write order, each as the initial physical plan
+    * of the write's input — the pre-write plans the FileScan boundary
+    * would otherwise hide. A shared table the build triggers writes
+    * first, so the query's OWN materialize is the last one: positive
+    * checks name it (`.last`), negative checks hold for every plan.
     */
-  private def materializedPlanOf(name: String): String =
+  private def materializedPlansOf(name: String): Seq[String] =
     PlanRecorder.record(SparkEntry.queries(name)(spark, TestSpark.Sf001))._2
-      .materialized.flatMap(_.replannedInput).mkString("\n")
+      .materialized.flatMap(_.replannedInput)
 
   test("q10: filters push down into the parquet scan") {
     val p = planOf("q10_range_filter")
@@ -409,7 +411,7 @@ class PlanSpec extends AnyFunSuite {
     // that rely on it: latest-per-key (q08) and grouped top-k (q39).
     Seq("q08_latest_per_key", "q39_knn_brute").foreach { q =>
       val p =
-        if (q == "q39_knn_brute") materializedPlanOf(q)
+        if (q == "q39_knn_brute") materializedPlansOf(q).last
         else planOf(q)
       assert(p.contains("WindowGroupLimit"),
         s"$q lost its group-limit prune:\n" + p.linesIterator.take(25).mkString("\n"))
@@ -421,7 +423,7 @@ class PlanSpec extends AnyFunSuite {
     // JOIN instead of collect_set OVER (PARTITION BY ckey), so no task
     // ever buffers a whole duplicate group — the attach join may shuffle
     // (skew-splittable), a window may not
-    val p = materializedPlanOf("q164_unicode_cleanup")
+    val p = materializedPlansOf("q164_unicode_cleanup").mkString("\n")
     assert(!p.contains("Window"), "q164 re-grew a dup-group window:\n" +
       p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"), p)
@@ -457,8 +459,9 @@ class PlanSpec extends AnyFunSuite {
     // materialized since r9 (pool'd RRF): pre-write plan still carries
     // the broadcast df/corpus joins, and each ranker's rank window must
     // sit above a TakeOrdered/Limit pool cut, never the raw matched set
-    val p = materializedPlanOf("q177_rrf_hybrid")
-    assert(!p.contains("CartesianProduct"))
+    val plans = materializedPlansOf("q177_rrf_hybrid")
+    val p = plans.last
+    assert(!plans.exists(_.contains("CartesianProduct")))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("TakeOrderedAndProject"),
       "rank pools lost their TakeOrdered cut:\n" +
@@ -511,33 +514,37 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q204: PQ codes and ADC LUT join broadcast — the corpus never shuffles by distance") {
-    val p = materializedPlanOf("q204_pq_adc_search")
+    val plans = materializedPlansOf("q204_pq_adc_search")
+    val p = plans.last
     // the (m, code) LUT join is a broadcast hash join
     assert(p.contains("BroadcastHashJoin"), p.linesIterator.take(30).mkString("\n"))
-    assert(!p.contains("CartesianProduct"), "q204 went cartesian")
+    assert(!plans.exists(_.contains("CartesianProduct")), "q204 went cartesian")
   }
 
   test("q205: anchor gram table broadcasts; candidates are bounded by the df window") {
-    val p = materializedPlanOf("q205_hard_negatives")
+    val plans = materializedPlansOf("q205_hard_negatives")
+    val p = plans.last
     assert(p.contains("BroadcastHashJoin"), p.linesIterator.take(30).mkString("\n"))
-    assert(!p.contains("CartesianProduct"), "q205 went cartesian")
+    assert(!plans.exists(_.contains("CartesianProduct")), "q205 went cartesian")
   }
 
   test("q207: bucket thresholds broadcast back to the doc scan (no per-doc rank window)") {
-    val p = materializedPlanOf("q207_ccnet_buckets")
+    val plans = materializedPlansOf("q207_ccnet_buckets")
+    val p = plans.last
     // no window operator on a per-doc key anywhere: thresholds come from
     // the value-domain histogram, docs bucket by broadcast compare
     assert(p.contains("BroadcastHashJoin"), p.linesIterator.take(40).mkString("\n"))
-    val windowOnDoc = p.linesIterator.exists(l =>
+    val windowOnDoc = plans.flatMap(_.linesIterator).exists(l =>
       l.contains("Window ") && l.contains("doc_id"))
     assert(!windowOnDoc, "per-doc window found in q207 plan")
   }
 
   test("q210: pHash pairs come from band-bucket equi-join, never a cartesian product") {
-    val p = materializedPlanOf("q210_image_phash_dedup")
+    val plans = materializedPlansOf("q210_image_phash_dedup")
+    val p = plans.last
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
       p.contains("BroadcastHashJoin"), p.linesIterator.take(30).mkString("\n"))
-    assert(!p.contains("CartesianProduct"), "q210 went cartesian")
+    assert(!plans.exists(_.contains("CartesianProduct")), "q210 went cartesian")
   }
 
   test("dot_scaled is callable from SQL after extension registration") {

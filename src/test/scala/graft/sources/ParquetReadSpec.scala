@@ -87,13 +87,13 @@ class ParquetReadSpec extends AnyFunSuite {
   test("a shared build that loses the race deletes its own temp dir at once") {
     import graft.operators.Scoped
     // a declared slug, so the registry audit still covers the key
-    val key = s"daily_bars:${Files.createTempDirectory("graft_race_")}"
+    val dir = Files.createTempDirectory("graft_race_").toString
     def liveDirs = new java.io.File(System.getProperty("java.io.tmpdir")).list()
       .count(_.startsWith("graft_shared_daily_bars_"))
     val before = liveDirs
     // the outer build runs a nested build of the same key, which wins
-    val df = Scoped.shared(spark, key)({
-      Scoped.shared(spark, key)((Nil, Seq(2L).toDF("x")))
+    val df = Scoped.shared(spark, "daily_bars", dir)({
+      Scoped.shared(spark, "daily_bars", dir)((Nil, Seq(2L).toDF("x")))
       (Nil, Seq(1L).toDF("x"))
     })
     assert(df.as[Long].collect().toSeq === Seq(2L))

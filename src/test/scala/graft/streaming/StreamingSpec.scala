@@ -456,6 +456,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(Streams.replayFeed(src(spark), "m", 3) !== first)
   }
 
+  test("replayFeed: the same source plan over two fixture dirs gives two feeds") {
+    def src(dir: String) = graft.sources.Tables.table(spark, dir, "orders")
+      .select(col("o_orderdate"), col("o_orderkey"))
+    val small = Streams.replayFeed(src(TestSpark.Sf001), "o_orderdate", 2)
+    val large = Streams.replayFeed(src(TestSpark.Sf01), "o_orderdate", 2)
+    assert(large !== small)
+    assert(spark.read.parquet(large).count() === src(TestSpark.Sf01).count())
+    // a replay query at sf0.01 run after sf0.001 answers as a fresh run
+    val q235 = graft.SparkEntry.queries("q235_stream_dollar_bars")
+    def bars(dir: String) = q235(spark, dir).collect().map(_.toString).toSet
+    bars(TestSpark.Sf001)
+    val warm = bars(TestSpark.Sf01)
+    graft.operators.Scoped.invalidate()
+    val fresh = bars(TestSpark.Sf01)
+    assert(warm.size === 3134 && warm === fresh)
+  }
+
   test("a stopped stream's checkpoint dir is deleted: repeated q41 runs leave none") {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def ckpts = Option(tmp.list()).toSet.flatten
