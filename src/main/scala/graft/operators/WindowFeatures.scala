@@ -803,9 +803,10 @@ object WindowFeatures extends QueryModule {
       val folds = (1 until WfFolds).map(fold).mkString(",\n      ")
       val emit = (1 until WfFolds).map(k => s"SELECT * FROM m$k")
         .mkString("\n      UNION ALL ")
+      // f is MATERIALIZED: DuckDB inlines a CTE into each of its ~20 uses
       s"""
       WITH $tripleBarrierSql,
-      f AS (
+      f AS MATERIALIZED (
         SELECT ticker, rn, n,
                CASE WHEN label = 1 THEN CAST(1 AS BIGINT)
                     ELSE CAST(-1 AS BIGINT) END AS y,
