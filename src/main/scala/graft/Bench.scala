@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Perf snapshot: one JSON line with per-query seconds on the bench SF,
   * printed to stdout AND written to a file (`SPARK_GRAFT_BENCH_OUT`,
@@ -31,23 +30,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy-fixture back-compat (TIMESTAMP(NANOS) generations): pin at
-      // session init so no query mutates shared conf at plan time; the
-      // current TIMESTAMP(MICROS) fixture ignores this conf entirely
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 72 queries × 2 passes blow through the default 100-entry codegen
-      // class cache; evictions force Janino recompiles mid-timed-pass and
-      // misattribute seconds to innocent queries
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     // what fixture generation this run measured — a schema change in the
     // driver-regenerated parquet shows up in the artifact diff, not as a
     // pile of mystery analysis errors (the round-6 lesson)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{count, first, lit, max}
 
 /** Dev-only convergence-residual probe (not part of the driver
@@ -10,12 +9,7 @@ import org.apache.spark.sql.functions.{count, first, lit, max}
 object ResidualProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else graft.plans.ConvergenceBounds.BenchSf
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     graft.plans.ConvergenceBounds.budgets
       .groupBy(_.query).toSeq.sortBy(_._1).foreach { case (q, rows) =>
         val df = SparkEntry.queries(q)(spark, dir)

@@ -320,7 +320,8 @@ object Extras extends QueryModule {
   // ---------------------------------------------------------------------
   // q78 — dynamic-partition-overwrite incremental restatement (S7 at
   // operating scale): a daily pipeline never rewrites the whole table to
-  // restate one slice — with partitionOverwriteMode=dynamic, an overwrite
+  // restate one slice — with partitionOverwriteMode=dynamic (a writer
+  // option, which takes precedence over the session conf), an overwrite
   // replaces ONLY the partitions present in the incoming frame. Here the
   // full events table lands partitioned by event_type, then the purchase
   // slice is restated (values doubled) and re-landed: one partition
@@ -333,24 +334,20 @@ object Extras extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val out = Files.createTempDirectory("graft_dynpart_").toString + "/events"
-      val modeKey = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.get(modeKey)
-      try {
-        spark.conf.set(modeKey, "dynamic")
-        val ev = Tables.events(spark, dir).filter($"ts".isNotNull)
-          .select($"event_id", $"event_type", $"user_id", $"value")
-        ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-        ev.filter($"event_type" === "purchase")
-          .withColumn("value", $"value" * 2)
-          .write.mode("overwrite").partitionBy("event_type").parquet(out)
-        // plain inference: partition discovery after the overwrite is the test
-        spark.read.parquet(out)
-          .groupBy($"event_type")
-          .agg(
-            count(lit(1)).as("n"),
-            dsumCents($"value").as("value_cents"))
-          .orderBy($"event_type")
-      } finally spark.conf.set(modeKey, prev)
+      val ev = Tables.events(spark, dir).filter($"ts".isNotNull)
+        .select($"event_id", $"event_type", $"user_id", $"value")
+      ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+      ev.filter($"event_type" === "purchase")
+        .withColumn("value", $"value" * 2)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type").parquet(out)
+      // plain inference: partition discovery after the overwrite is the test
+      spark.read.parquet(out)
+        .groupBy($"event_type")
+        .agg(
+          count(lit(1)).as("n"),
+          dsumCents($"value").as("value_cents"))
+        .orderBy($"event_type")
     },
     Some("""
       SELECT event_type, count(*) AS n,

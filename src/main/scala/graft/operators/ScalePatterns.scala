@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, QueryModule}
+import graft.{QueryDef, QueryModule, Session}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -268,30 +268,15 @@ object ScalePatterns extends QueryModule {
   // injection heuristics are sized for cluster-scale scans, not local
   // fixtures; broadcast is disabled so the shuffle the bloom protects
   // actually exists (with a broadcastable dim Spark would — correctly —
-  // prefer a plain BroadcastHashJoin).
+  // prefer a plain BroadcastHashJoin). The frame lives on a clone with
+  // those confs, since the optimizer reads them when the action runs.
   // ---------------------------------------------------------------------
-  private val bloomConfs = Map(
-    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-
-  /** Run `body` with the bloom-injection confs set, restoring after; the
-    * terminal action must run INSIDE (conf is read at planning time) —
-    * exposed for the PlanSpec assertion.
-    */
-  private[graft] def withBloomConfs[A](spark: SparkSession)(body: => A): A = {
-    val prev = bloomConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      bloomConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private[graft] def bloomJoinFrame(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def bloomJoinFrame(outer: SparkSession, dir: String): DataFrame = {
+    val spark = Session.withConfs(outer,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     import spark.implicits._
     val urgent = Tables.orders(spark, dir)
       .filter($"o_orderpriority" === "1-URGENT")
@@ -309,11 +294,7 @@ object ScalePatterns extends QueryModule {
     "q87_bloom_filtered_join",
     (spark, dir) => {
       import spark.implicits._
-      withBloomConfs(spark) {
-        // materialize inside the conf scope — the optimizer reads SQLConf
-        // when the action runs, not when the frame is declared
-        Scoped.materialize()(bloomJoinFrame(spark, dir))
-      }.orderBy($"o_orderstatus")
+      Scoped.materialize()(bloomJoinFrame(spark, dir)).orderBy($"o_orderstatus")
     },
     Some("""
       SELECT o_orderstatus, count(*) AS n,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{QueryDef, QueryModule}
+import graft.{QueryDef, QueryModule, Session}
 import graft.operators.Scoped
 import graft.sources.{Memo, Parquet, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -39,23 +39,18 @@ object Streams extends QueryModule {
     *     concurrently on the shared session can never observe it (conf
     *     mutation on a shared session is not thread-safe scoping).
     */
-  private def streamSession(spark: SparkSession): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    ss
-  }
+  private def streamSession(spark: SparkSession): SparkSession =
+    Session.withConfs(spark, "spark.sql.shuffle.partitions" -> "8")
 
   /** [[streamSession]] on the RocksDB state-store provider: the session
     * of every transformWithState query (the API requires RocksDB). The
     * provider is set on the clone only, so batch queries and the other
     * streaming queries keep the default HDFS-backed provider.
     */
-  private def statefulSession(spark: SparkSession): SparkSession = {
-    val ss = streamSession(spark)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    ss
-  }
+  private[graft] def statefulSession(spark: SparkSession): SparkSession =
+    Session.withConfs(spark, "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Streaming scan of the events fixture (S2 as file source). Schema is
     * declared, never inferred (§1.2): the fixture stores `ts` as parquet

@@ -125,19 +125,14 @@ class PlanSpec extends AnyFunSuite {
     // at fixture scale the planner would rather broadcast the small side
     // (also fine — also shuffle-free); pin both sides big to force the
     // merge path the 100 TB layout relies on
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = graft.operators.ScalePatterns.bucketedJoin(spark, TestSpark.Sf001)
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p.linesIterator.take(10).mkString("\n"))
-      assert(!p.contains("hashpartitioning(l_orderkey") &&
-        !p.contains("hashpartitioning(o_orderkey"), p)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    }
+    val noBroadcast = Session.withConfs(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+    val df = graft.operators.ScalePatterns.bucketedJoin(noBroadcast, TestSpark.Sf001)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("SortMergeJoin"), p.linesIterator.take(10).mkString("\n"))
+    assert(!p.contains("hashpartitioning(l_orderkey") &&
+      !p.contains("hashpartitioning(o_orderkey"), p)
   }
 
   test("q97: rank-filter top-k plans WindowGroupLimit (per-partition k-row cap)") {
@@ -153,12 +148,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q87: runtime bloom filter prunes the fact scan before the join shuffle") {
-    graft.operators.ScalePatterns.withBloomConfs(spark) {
-      val df = graft.operators.ScalePatterns.bloomJoinFrame(spark, TestSpark.Sf001)
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("might_contain"), p.linesIterator.take(20).mkString("\n"))
-      assert(p.contains("bloom_filter_agg"), p)
-    }
+    val df = graft.operators.ScalePatterns.bloomJoinFrame(spark, TestSpark.Sf001)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("might_contain"), p.linesIterator.take(20).mkString("\n"))
+    assert(p.contains("bloom_filter_agg"), p)
   }
 
   test("q36: simhash candidates join on band buckets, never the lang block alone") {

@@ -13,7 +13,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("AQE splits a skewed join partition (skew=true in the final plan)") {
-    val confs = Map(
+    val spark = Session.withConfs(TestSpark.spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -23,28 +23,21 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      // 200k rows, 95% on one key — the classic skewed fact
-      val fact = spark.range(0, 200000)
-        .select(
-          when($"id" % 20 =!= 0, lit(7L)).otherwise($"id" % 1000).as("k"),
-          concat(lit("payload_payload_payload_payload_"), $"id").as("v"))
-      val dim = spark.range(0, 1000).select($"id".as("k"), ($"id" * 2).as("w"))
-      // global aggregate: its partial phase accepts any partitioning, so
-      // AQE is free to split the skewed join partition (a groupBy on the
-      // join key would pin the partitioning and veto the split)
-      val joined = fact.join(dim, "k")
-        .agg(count(lit(1)).as("n"), sum(length($"v")).as("bytes"))
-      val row = joined.collect()(0)
-      assert(row.getLong(0) === 200000L)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"), plan.linesIterator.take(25).mkString("\n"))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    // 200k rows, 95% on one key — the classic skewed fact
+    val fact = spark.range(0, 200000)
+      .select(
+        when($"id" % 20 =!= 0, lit(7L)).otherwise($"id" % 1000).as("k"),
+        concat(lit("payload_payload_payload_payload_"), $"id").as("v"))
+    val dim = spark.range(0, 1000).select($"id".as("k"), ($"id" * 2).as("w"))
+    // global aggregate: its partial phase accepts any partitioning, so
+    // AQE is free to split the skewed join partition (a groupBy on the
+    // join key would pin the partitioning and veto the split)
+    val joined = fact.join(dim, "k")
+      .agg(count(lit(1)).as("n"), sum(length($"v")).as("bytes"))
+    val row = joined.collect()(0)
+    assert(row.getLong(0) === 200000L)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("skew=true"), plan.linesIterator.take(25).mkString("\n"))
   }
 
   test("codebook law: k capped, assignment O(n^1.5), model state bounded") {
@@ -155,12 +148,9 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     // would hide the split — pin cluster-shaped chunking for the proof
     // (at operating scale the advisory byte size bounds chunks the same
     // way the partition count does here).
-    val confs = Map(
+    val spark = Session.withConfs(TestSpark.spark,
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
     val n = 60000L
     val hot = spark.range(0, 50000).select(
       lit(java.sql.Date.valueOf("2024-03-01")).as("day"),
@@ -210,10 +200,6 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     val plan = Analytics.sweepPeaks(points)
       .queryExecution.executedPlan.toString
     assert(plan.contains("rangepartitioning"), plan.linesIterator.take(30).mkString("\n"))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   test("query results are invariant to spark.sql.shuffle.partitions") {
@@ -226,21 +212,17 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     val names = Seq("q01_pricing_summary", "q63_sessionize", "q83_outlier_days",
       "q85_heavy_hitters", "q88_retention_cohorts", "q111_shuffle_shards",
       "q112_source_mixture", "q122_perceptron_train")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    def runAll(): Map[String, Seq[String]] =
+    def runAll(parts: Int): Map[String, Seq[String]] = {
+      val s = Session.withConfs(spark, "spark.sql.shuffle.partitions" -> parts.toString)
       names.map { n =>
-        n -> SparkEntry.queries(n)(spark, TestSpark.Sf001)
+        n -> SparkEntry.queries(n)(s, TestSpark.Sf001)
           .collect().map(_.toString).toSeq
       }.toMap
-    try {
-      spark.conf.set(key, "3")
-      val a = runAll()
-      spark.conf.set(key, "17")
-      val b = runAll()
-      names.foreach(n => assert(a(n) === b(n), s"$n diverged across partition counts"))
-      assert(a(names.head).nonEmpty)
-    } finally spark.conf.set(key, prev)
+    }
+    val a = runAll(3)
+    val b = runAll(17)
+    names.foreach(n => assert(a(n) === b(n), s"$n diverged across partition counts"))
+    assert(a(names.head).nonEmpty)
   }
 
   test("hot symbol-day tick tape: chunk windows bounded; chunked flow == naive global window") {
@@ -251,82 +233,75 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     // verdict's last data-dependent bound). AQE coalesce off + pinned
     // partition count so the fixture-sized rows can't collapse into one
     // chunk and hide the split.
-    val confs = Map(
+    val spark = Session.withConfs(TestSpark.spark,
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      // hot day: price path with FLAT RUNS (id div 3 repeats each price
-      // 3×) so the tick-rule sign is null on two of three ticks and the
-      // last-non-null carry must really stitch across chunk seams
-      val hot = spark.range(0, 50000).select(
-        lit(1L).as("tkr"),
-        lit(java.sql.Date.valueOf("2024-03-01")).as("day"),
-        $"id".as("seq"),
-        (lit(1000000L) + (($"id" / 3).cast("long") * 7919L) % 997L - 498L)
-          .as("cents"))
-      // cold days on the same + other tickers, including days BEFORE and
-      // AFTER the hot day so the cross-day carry/base stitching is live
-      val cold = spark.range(0, 11000).select(
-        ($"id" % 4L + 1L).as("tkr"),
-        to_date(lit("2024-02-27").cast("date") + ($"id" % 7).cast("int"))
-          .as("day"),
-        ($"id" + 100000L).as("seq"),
-        (lit(1000000L) + ($"id" * 31L) % 1009L - 504L).as("cents"))
-        // drop the hot (tkr=1, 2024-03-01) overlap — seq must not collide
-        .filter(!($"tkr" === 1L && $"day" === lit("2024-03-01").cast("date")))
-      val tape = hot.unionByName(cold)
-      val n = tape.count()
-      // (a) the chunking law: no running-state window partition — a
-      // (tkr, day, _pid) cell — holds more than a balanced share, and
-      // the hot symbol-day REALLY splits across chunks
-      val (flow, rec) = PlanRecorder.record(Series.flowFromTape(tape))
-      val cells = flow.groupBy($"tkr", $"day", $"_pid")
-        .agg(count(lit(1)).as("rows")).collect()
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val maxCell = cells.map(_.getAs[Long]("rows")).max
-      assert(maxCell <= 4L * n / parts,
-        s"chunk of $maxCell rows — hot symbol-day not split (ideal ${n / parts})")
-      assert(cells.count(r => r.getAs[Long]("tkr") == 1L &&
-        r.getAs[java.sql.Date]("day").toString == "2024-03-01") > 1,
-        "hot symbol-day landed in a single chunk")
-      assert(cells.map(_.getAs[Long]("rows")).sum === n)
-      // (b) exactness: the chunk-stitched cumulative and sign carry
-      // equal the naive single-global-window-per-ticker reference
-      import org.apache.spark.sql.expressions.Window
-      val wG = Window.partitionBy($"tkr").orderBy($"day", $"seq")
-      val naive = tape
-        .withColumn("cum0", sum($"cents").over(wG))
-        .withColumn("prev", lag($"cents", 1).over(wG))
-        .withColumn("s",
-          when($"prev".isNull, lit(null).cast("int"))
-            .when($"cents" > $"prev", 1)
-            .when($"cents" < $"prev", -1))
-        .withColumn("s_filled",
-          coalesce(last($"s", ignoreNulls = true).over(wG), lit(1)))
-        .select($"tkr", $"seq", $"cum0", $"s_filled")
-        .orderBy($"tkr", $"seq").collect().map(_.toString)
-      val chunked = flow.select($"tkr", $"seq", $"cum0", $"s_filled")
-        .orderBy($"tkr", $"seq").collect().map(_.toString)
-      assert(chunked.toSeq === naive.toSeq)
-      // (c) plan shape: since the r11 chunk-id pin the range exchange
-      // lives BEHIND the localCheckpoint boundary — downstream plans show
-      // the checkpointed Scan ExistingRDD (proof the chunk ids are pinned
-      // by materialization, not exchange reuse), and the recorded
-      // pre-checkpoint plan still shows the rangepartitioning that
-      // parallelizes the sort
-      val plan = flow.queryExecution.executedPlan.toString
-      assert(plan.contains("Scan ExistingRDD"),
-        plan.linesIterator.take(30).mkString("\n"))
-      val chunkInput = rec.executions.filter(_.name.contains("localCheckpoint"))
-        .map(_.qe.executedPlan.toString).mkString("\n")
-      assert(chunkInput.contains("rangepartitioning"),
-        chunkInput.linesIterator.take(30).mkString("\n"))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    // hot day: price path with FLAT RUNS (id div 3 repeats each price
+    // 3×) so the tick-rule sign is null on two of three ticks and the
+    // last-non-null carry must really stitch across chunk seams
+    val hot = spark.range(0, 50000).select(
+      lit(1L).as("tkr"),
+      lit(java.sql.Date.valueOf("2024-03-01")).as("day"),
+      $"id".as("seq"),
+      (lit(1000000L) + (($"id" / 3).cast("long") * 7919L) % 997L - 498L)
+        .as("cents"))
+    // cold days on the same + other tickers, including days BEFORE and
+    // AFTER the hot day so the cross-day carry/base stitching is live
+    val cold = spark.range(0, 11000).select(
+      ($"id" % 4L + 1L).as("tkr"),
+      to_date(lit("2024-02-27").cast("date") + ($"id" % 7).cast("int"))
+        .as("day"),
+      ($"id" + 100000L).as("seq"),
+      (lit(1000000L) + ($"id" * 31L) % 1009L - 504L).as("cents"))
+      // drop the hot (tkr=1, 2024-03-01) overlap — seq must not collide
+      .filter(!($"tkr" === 1L && $"day" === lit("2024-03-01").cast("date")))
+    val tape = hot.unionByName(cold)
+    val n = tape.count()
+    // (a) the chunking law: no running-state window partition — a
+    // (tkr, day, _pid) cell — holds more than a balanced share, and
+    // the hot symbol-day REALLY splits across chunks
+    val (flow, rec) = PlanRecorder.record(Series.flowFromTape(tape))
+    val cells = flow.groupBy($"tkr", $"day", $"_pid")
+      .agg(count(lit(1)).as("rows")).collect()
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val maxCell = cells.map(_.getAs[Long]("rows")).max
+    assert(maxCell <= 4L * n / parts,
+      s"chunk of $maxCell rows — hot symbol-day not split (ideal ${n / parts})")
+    assert(cells.count(r => r.getAs[Long]("tkr") == 1L &&
+      r.getAs[java.sql.Date]("day").toString == "2024-03-01") > 1,
+      "hot symbol-day landed in a single chunk")
+    assert(cells.map(_.getAs[Long]("rows")).sum === n)
+    // (b) exactness: the chunk-stitched cumulative and sign carry
+    // equal the naive single-global-window-per-ticker reference
+    import org.apache.spark.sql.expressions.Window
+    val wG = Window.partitionBy($"tkr").orderBy($"day", $"seq")
+    val naive = tape
+      .withColumn("cum0", sum($"cents").over(wG))
+      .withColumn("prev", lag($"cents", 1).over(wG))
+      .withColumn("s",
+        when($"prev".isNull, lit(null).cast("int"))
+          .when($"cents" > $"prev", 1)
+          .when($"cents" < $"prev", -1))
+      .withColumn("s_filled",
+        coalesce(last($"s", ignoreNulls = true).over(wG), lit(1)))
+      .select($"tkr", $"seq", $"cum0", $"s_filled")
+      .orderBy($"tkr", $"seq").collect().map(_.toString)
+    val chunked = flow.select($"tkr", $"seq", $"cum0", $"s_filled")
+      .orderBy($"tkr", $"seq").collect().map(_.toString)
+    assert(chunked.toSeq === naive.toSeq)
+    // (c) plan shape: since the r11 chunk-id pin the range exchange
+    // lives BEHIND the localCheckpoint boundary — downstream plans show
+    // the checkpointed Scan ExistingRDD (proof the chunk ids are pinned
+    // by materialization, not exchange reuse), and the recorded
+    // pre-checkpoint plan still shows the rangepartitioning that
+    // parallelizes the sort
+    val plan = flow.queryExecution.executedPlan.toString
+    assert(plan.contains("Scan ExistingRDD"),
+      plan.linesIterator.take(30).mkString("\n"))
+    val chunkInput = rec.executions.filter(_.name.contains("localCheckpoint"))
+      .map(_.qe.executedPlan.toString).mkString("\n")
+    assert(chunkInput.contains("rangepartitioning"),
+      chunkInput.linesIterator.take(30).mkString("\n"))
   }
 
   test("hot user event tape: chunk windows bounded; chunked scan == naive global window") {
@@ -335,84 +310,77 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     // owns 50k of 60k events — the r10 verdict's "declared user_id
     // contract" hazard made concrete. AQE coalesce off + pinned partition
     // count so fixture-sized rows can't collapse into one chunk.
-    val confs = Map(
+    val spark = Session.withConfs(TestSpark.spark,
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      // hot user: 1-minute cadence with a >30-min gap every 40 events
-      // (sessions must stitch across chunk seams), event types in runs of
-      // 3 (version carry must stitch too), and tus TIES in pairs (the
-      // event_id tiebreak must order identically on both paths)
-      val hot = spark.range(0, 50000).select(
-        lit(7L).as("user_id"),
-        (($"id" / 2).cast("long") * 60000000L +
-          ($"id" / 40).cast("long") * 3600000000L).as("tus"),
-        concat(lit("e"), format_string("%06d", $"id")).as("event_id"),
-        element_at(array(lit("view"), lit("click"), lit("purchase")),
-          (($"id" / 3) % 3 + 1).cast("int")).as("event_type"))
-      val cold = spark.range(0, 10000).select(
-        ($"id" % 50L + 100L).as("user_id"),
-        ($"id" * 45000000L).as("tus"),
-        concat(lit("c"), format_string("%06d", $"id")).as("event_id"),
-        element_at(array(lit("view"), lit("click")),
-          ($"id" % 2 + 1).cast("int")).as("event_type"))
-      val tape = hot.unionByName(cold)
-      val n = tape.count()
-      val scanned = Analytics.chunkedUserScan(tape)
-      // (a) the chunking law: no running-state window partition — a
-      // (user_id, _pid) cell — holds more than a balanced share, and the
-      // hot user REALLY splits across chunks
-      val cells = scanned.groupBy($"user_id", $"_pid")
-        .agg(count(lit(1)).as("rows")).collect()
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val maxCell = cells.map(_.getAs[Long]("rows")).max
-      assert(maxCell <= 4L * n / parts,
-        s"chunk of $maxCell rows — hot user not split (ideal ${n / parts})")
-      assert(cells.count(_.getAs[Long]("user_id") == 7L) > 1,
-        "hot user landed in a single chunk")
-      assert(cells.map(_.getAs[Long]("rows")).sum === n)
-      // (b) exactness: stitched lags + session/version islands equal the
-      // naive single-global-window-per-user reference
-      import org.apache.spark.sql.expressions.Window
-      val wG = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
-      val wGr = wG.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val naive = tape
-        .withColumn("prev_tus", lag($"tus", 1).over(wG))
-        .withColumn("prev_type", lag($"event_type", 1).over(wG))
-        .withColumn("has_prev", $"prev_tus".isNotNull)
-        .withColumn("sid", sum(
-          when($"prev_tus".isNull ||
-            $"tus" - $"prev_tus" > Analytics.SessionGapUs, 1L)
-            .otherwise(0L)).over(wGr))
-        .withColumn("version", sum(
-          when($"prev_tus".isNull || $"prev_type" =!= $"event_type", 1L)
-            .otherwise(0L)).over(wGr))
-        .select($"user_id", $"event_id", $"prev_tus", $"prev_type",
-          $"has_prev", $"sid", $"version")
-        .orderBy($"user_id", $"event_id").collect().map(_.toString)
-      val chunked = scanned
-        .select($"user_id", $"event_id", $"prev_tus", $"prev_type",
-          $"has_prev", $"sid", $"version")
-        .orderBy($"user_id", $"event_id").collect().map(_.toString)
-      assert(chunked.toSeq === naive.toSeq)
-      // (c) plan shape: the stitch is a keyed join on (user_id, _pid) and
-      // every window spec naming user_id ALSO carries _pid or the cu
-      // summary grain — no raw per-user window anywhere. (The range
-      // exchange itself sits behind the pinning localCheckpoint, so it is
-      // not visible in this plan string; the chunk-balance law in (a) is
-      // the evidence it ran.)
-      val plan = scanned.queryExecution.executedPlan.toString
-      val rawUserWindows = plan.linesIterator.filter { l =>
-        l.contains("windowspecdefinition(user_id") &&
-          !l.contains("_pid") && !l.contains("cu#")
-      }.toSeq
-      assert(rawUserWindows.isEmpty, rawUserWindows.mkString("\n"))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    // hot user: 1-minute cadence with a >30-min gap every 40 events
+    // (sessions must stitch across chunk seams), event types in runs of
+    // 3 (version carry must stitch too), and tus TIES in pairs (the
+    // event_id tiebreak must order identically on both paths)
+    val hot = spark.range(0, 50000).select(
+      lit(7L).as("user_id"),
+      (($"id" / 2).cast("long") * 60000000L +
+        ($"id" / 40).cast("long") * 3600000000L).as("tus"),
+      concat(lit("e"), format_string("%06d", $"id")).as("event_id"),
+      element_at(array(lit("view"), lit("click"), lit("purchase")),
+        (($"id" / 3) % 3 + 1).cast("int")).as("event_type"))
+    val cold = spark.range(0, 10000).select(
+      ($"id" % 50L + 100L).as("user_id"),
+      ($"id" * 45000000L).as("tus"),
+      concat(lit("c"), format_string("%06d", $"id")).as("event_id"),
+      element_at(array(lit("view"), lit("click")),
+        ($"id" % 2 + 1).cast("int")).as("event_type"))
+    val tape = hot.unionByName(cold)
+    val n = tape.count()
+    val scanned = Analytics.chunkedUserScan(tape)
+    // (a) the chunking law: no running-state window partition — a
+    // (user_id, _pid) cell — holds more than a balanced share, and the
+    // hot user REALLY splits across chunks
+    val cells = scanned.groupBy($"user_id", $"_pid")
+      .agg(count(lit(1)).as("rows")).collect()
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val maxCell = cells.map(_.getAs[Long]("rows")).max
+    assert(maxCell <= 4L * n / parts,
+      s"chunk of $maxCell rows — hot user not split (ideal ${n / parts})")
+    assert(cells.count(_.getAs[Long]("user_id") == 7L) > 1,
+      "hot user landed in a single chunk")
+    assert(cells.map(_.getAs[Long]("rows")).sum === n)
+    // (b) exactness: stitched lags + session/version islands equal the
+    // naive single-global-window-per-user reference
+    import org.apache.spark.sql.expressions.Window
+    val wG = Window.partitionBy($"user_id").orderBy($"tus", $"event_id")
+    val wGr = wG.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val naive = tape
+      .withColumn("prev_tus", lag($"tus", 1).over(wG))
+      .withColumn("prev_type", lag($"event_type", 1).over(wG))
+      .withColumn("has_prev", $"prev_tus".isNotNull)
+      .withColumn("sid", sum(
+        when($"prev_tus".isNull ||
+          $"tus" - $"prev_tus" > Analytics.SessionGapUs, 1L)
+          .otherwise(0L)).over(wGr))
+      .withColumn("version", sum(
+        when($"prev_tus".isNull || $"prev_type" =!= $"event_type", 1L)
+          .otherwise(0L)).over(wGr))
+      .select($"user_id", $"event_id", $"prev_tus", $"prev_type",
+        $"has_prev", $"sid", $"version")
+      .orderBy($"user_id", $"event_id").collect().map(_.toString)
+    val chunked = scanned
+      .select($"user_id", $"event_id", $"prev_tus", $"prev_type",
+        $"has_prev", $"sid", $"version")
+      .orderBy($"user_id", $"event_id").collect().map(_.toString)
+    assert(chunked.toSeq === naive.toSeq)
+    // (c) plan shape: the stitch is a keyed join on (user_id, _pid) and
+    // every window spec naming user_id ALSO carries _pid or the cu
+    // summary grain — no raw per-user window anywhere. (The range
+    // exchange itself sits behind the pinning localCheckpoint, so it is
+    // not visible in this plan string; the chunk-balance law in (a) is
+    // the evidence it ran.)
+    val plan = scanned.queryExecution.executedPlan.toString
+    val rawUserWindows = plan.linesIterator.filter { l =>
+      l.contains("windowspecdefinition(user_id") &&
+        !l.contains("_pid") && !l.contains("cu#")
+    }.toSeq
+    assert(rawUserWindows.isEmpty, rawUserWindows.mkString("\n"))
   }
 
   test("hot document plant: the MaxDocChars guard quarantines it and leaves the corpus result untouched") {
@@ -474,20 +442,17 @@ class ScaleBehaviorSpec extends AnyFunSuite {
     graft.sources.Tables.events(spark, TestSpark.Sf001)
       .filter($"ts".isNotNull)
       .write.mode("overwrite").partitionBy("event_type").parquet(s"$base/fact")
-    val fact = spark.read.parquet(s"$base/fact")
     Seq(("purchase", 1L), ("click", 2L), ("view", 3L))
       .toDF("t", "weight")
       .write.mode("overwrite").parquet(s"$base/dim")
-    val dim = spark.read.parquet(s"$base/dim")
-    val keys = Seq(
-      "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
+    val ss = Session.withConfs(spark,
+      "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" -> "false",
       // the benefit heuristic uses size stats — a KB-sized fixture fact
       // never clears it, so pin the fallback ratio path for the proof
-      "spark.sql.optimizer.dynamicPartitionPruning.useStats")
-    val prevs = keys.map(k => k -> spark.conf.get(k))
+      "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false")
+    val fact = ss.read.parquet(s"$base/fact")
+    val dim = ss.read.parquet(s"$base/dim")
     try {
-      spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
       val joined = fact.join(dim.filter($"weight" === 1L), fact("event_type") === dim("t"))
         .agg(count(lit(1)).as("n"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -495,7 +460,6 @@ class ScaleBehaviorSpec extends AnyFunSuite {
         plan.linesIterator.take(25).mkString("\n"))
       assert(joined.head().getLong(0) > 0L)
     } finally {
-      prevs.foreach { case (k, v) => spark.conf.set(k, v) }
       // the fixture parquet is test-local scratch — delete it or every
       // run leaks a copy of the events table into the temp filesystem
       import scala.jdk.CollectionConverters._

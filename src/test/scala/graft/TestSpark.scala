@@ -2,18 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for every suite (Test/parallelExecution=false). */
+/** One shared local session for every suite (Test/parallelExecution=false),
+  * on a fixed 4 cores so partition counts do not depend on the host.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // legacy-fixture back-compat (TIMESTAMP(NANOS) generations): pin at
-    // session init so no query mutates shared conf at plan time; the
-    // current TIMESTAMP(MICROS) fixture ignores this conf entirely
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   val Sf001 = "/root/testdata/sf0.001"
   val Sf01 = "/root/testdata/sf0.01"

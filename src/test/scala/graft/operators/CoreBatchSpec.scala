@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{SparkEntry, TestSpark}
+import graft.{Session, SparkEntry, TestSpark}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CoreBatchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private def run(name: String) = SparkEntry.queries(name)(spark, TestSpark.Sf001)
+  private def run(name: String, s: SparkSession = spark) =
+    SparkEntry.queries(name)(s, TestSpark.Sf001)
 
   test("q02 daily bars: OHLC invariants hold (low <= open/close <= high)") {
     val bad = run("q02_daily_bars")
@@ -28,13 +30,10 @@ class CoreBatchSpec extends AnyFunSuite {
   }
 
   test("q01 is partition-count invariant (exact decimal aggregation)") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
     val a = run("q01_pricing_summary").collect().toSeq
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val b = run("q01_pricing_summary").collect().toSeq
-      assert(a === b)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    val b = run("q01_pricing_summary",
+      Session.withConfs(spark, "spark.sql.shuffle.partitions" -> "7")).collect().toSeq
+    assert(a === b)
   }
 
   test("q03 gold pipeline: left join preserves every bar and fills nulls") {

@@ -41,8 +41,7 @@ class TextSentimentSpec extends AnyFunSuite {
 
   test("q31 lexicon lookup: ANSI on gives the ANSI-off result (absent tokens score 0)") {
     def q31(ansi: Boolean): Seq[String] = {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      val s = graft.Session.withConfs(spark, "spark.sql.ansi.enabled" -> ansi.toString)
       graft.SparkEntry.queries("q31_sentiment_score")(s, TestSpark.Sf001)
         .collect().map(_.toString).toSeq.sorted
     }

@@ -74,8 +74,7 @@ class KafkaReplaySpec extends AnyFunSuite {
 
   test("maxOffsetsPerTrigger rate-limits into multiple exactly-once micro-batches") {
     import org.apache.spark.sql.streaming.Trigger
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    val ss = graft.Session.withConfs(spark, "spark.sql.shuffle.partitions" -> "4")
     val raw = ss.readStream.format("kafka-replay")
       .option("path", s"${TestSpark.Sf001}/events.parquet")
       .option("topic", "events").option("numPartitions", NParts.toString)
@@ -163,8 +162,7 @@ class KafkaReplaySpec extends AnyFunSuite {
 
   test("checkpoint restart resumes from the committed offsets, no replay, no loss") {
     import org.apache.spark.sql.streaming.Trigger
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    val ss = graft.Session.withConfs(spark, "spark.sql.shuffle.partitions" -> "4")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_kr_restart_").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def reader() = ss.readStream.format("kafka-replay")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Streaming-semantics tests on MemoryStream (SURVEY.md §5.4): append-mode
   * emission on watermark passage, late-data drop beyond the 10-minute
@@ -155,35 +156,29 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stateful query runs green under the RocksDB state-store provider (T7)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the engine's own stateful session, not a copy of its provider conf
+    val ss = Streams.statefulSession(spark)
+    implicit val sqlCtx = ss.sqlContext
+    val in = MemoryStream[Streams.EventRow]
+    val q = in.toDS()
+      .groupByKey(_.user_id)
+      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(Streams.mergeState)
+      .toDF()
+      .writeStream.format("memory").queryName("t7_rocksdb").outputMode("update").start()
     try {
-      val in = MemoryStream[Streams.EventRow]
-      val q = in.toDS()
-        .groupByKey(_.user_id)
-        .mapGroupsWithState(GroupStateTimeout.NoTimeout)(Streams.mergeState)
-        .toDF()
-        .writeStream.format("memory").queryName("t7_rocksdb").outputMode("update").start()
-      try {
-        in.addData(Streams.EventRow(1L, t("2021-01-01 10:00:00"), 3L, "a", 1.25))
-        q.processAllAvailable()
-        in.addData(Streams.EventRow(2L, t("2021-01-01 11:00:00"), 3L, "b", 2.50))
-        q.processAllAvailable()
-        // state survived across micro-batches under RocksDB
-        val r = spark.table("t7_rocksdb").filter($"n" === 2).collect()
-        assert(r.length === 1 && r(0).getAs[Long]("cents") === 375L)
-        assert(q.lastProgress.stateOperators.nonEmpty)
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
+      in.addData(Streams.EventRow(1L, t("2021-01-01 10:00:00"), 3L, "a", 1.25))
+      q.processAllAvailable()
+      in.addData(Streams.EventRow(2L, t("2021-01-01 11:00:00"), 3L, "b", 2.50))
+      q.processAllAvailable()
+      // state survived across micro-batches under RocksDB
+      val r = ss.table("t7_rocksdb").filter($"n" === 2).collect()
+      assert(r.length === 1 && r(0).getAs[Long]("cents") === 375L)
+      val ops = q.lastProgress.stateOperators
+      assert(ops.nonEmpty)
+      assert(ops.head.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
+        ops.head.customMetrics)
+    } finally q.stop()
   }
 
   test("checkpointed file-source query resumes without reprocessing (T4 recovery)") {

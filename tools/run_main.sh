@@ -4,7 +4,9 @@
 # Env: SPARK_DRIVER_MEM (default 8g) plus whatever the main reads.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-CP="target/scala-2.13/classes:/opt/spark/jars/*"
+# resources too: `sbt compile` does not copy src/main/resources (the
+# kafka-replay DataSourceRegister) into the classes dir
+CP="target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -14,6 +16,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$CP" "$@"
