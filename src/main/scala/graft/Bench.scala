@@ -15,7 +15,9 @@ package graft
   * a single sample tracks host luck (round 4's driver run was 24% noise
   * that vanished on a quiet re-run). Both raw passes are emitted in the
   * output file alongside the min so variance is auditable per query.
-  * Queries run in name order for stable output.
+  * Queries run in name order for stable output. Every call builds cold
+  * (`SparkEntry.coldQueries`): the census times the builder and the
+  * analyzer too, which the serving path skips on a repeated request.
   *
   * The timed action is a `noop`-format write, not `count()`: count lets
   * Catalyst prune every unreferenced output expression and drop the final
@@ -64,7 +66,7 @@ object Bench {
       require(n > 0 && k >= 0 && k < n, s"bad cohort spec $s")
       (k, n)
     }
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.coldQueries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
       .filter(nm => cohort.forall { case (k, n) =>
         math.floorMod(nm.hashCode, n) == k })
@@ -72,7 +74,7 @@ object Bench {
     def time(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, sfDir)
+        SparkEntry.coldQueries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         Right((System.nanoTime() - t0) / 1e9)
       } catch {

@@ -84,7 +84,13 @@ private[graft] object Scoped {
     * file rewritten under `dir` rebuilds the table on its next read and
     * deletes the superseded dir.
     */
-  private val tables = new Memo[(String, StructType)](t => dropTempDir(t._1))
+  private final case class Table(path: String, schema: StructType, dir: String)
+  private val tables = new Memo[Table](t => dropTempDir(t.path))
+
+  /** The path of every shared table built over `dir` or over no dir: the
+    * tables a plan over `dir` reads at `dir`'s input version. */
+  private[graft] def sharedOver(dir: String): Set[String] =
+    tables.values.collect { case t if t.dir.isEmpty || t.dir == dir => t.path }.toSet
 
   /** Every key a shared build has run for this session (servebench's
     * dashboard counts silver misses off it).
@@ -100,7 +106,7 @@ private[graft] object Scoped {
       build: => (Seq[DataFrame], DataFrame)): DataFrame = {
     val key = if (dir.isEmpty) name else s"$name:$dir"
     val version = if (dir.isEmpty) "" else Parquet.inputVersion(spark, Seq(dir))
-    val (path, schema) = tables(key, version) {
+    val table = tables(key, version) {
       built.add(key)
       val (persisted, result) = build
       // embed the logical name in the dir so plans/listings show WHICH
@@ -108,13 +114,13 @@ private[graft] object Scoped {
       val out = newTempDir(s"graft_shared_${name.replaceAll("[^A-Za-z0-9_]", "_")}_")
       result.write.mode("overwrite").parquet(out)
       persisted.foreach(_.unpersist())
-      (out, result.schema)
+      Table(out, result.schema, dir)
     }
-    Parquet.read(spark, path, Some(schema))
+    Parquet.read(spark, table.path, Some(table.schema))
   }
 
-  /** Clear every memo: derived tables and replay feeds are dropped and
-    * their dirs deleted (the next caller rebuilds); a frame still reading
-    * a dropped table fails. */
+  /** Clear every memo: derived tables, replay feeds and prepared plans
+    * are dropped and the tables' dirs deleted (the next caller rebuilds);
+    * a frame still reading a dropped table fails. */
   def invalidate(): Unit = Memo.clearAll()
 }

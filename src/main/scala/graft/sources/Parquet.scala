@@ -15,10 +15,12 @@ import org.apache.spark.sql.types.StructType
   *   - a writer that re-reads what it just wrote passes the schema of the
   *     frame it wrote (`schema`), and the read starts no job;
   *   - an input the engine did not write (a fixture file) is inferred
-  *     once per session and [[inputVersion]], plus the session's parquet
-  *     confs (inference reads e.g. `spark.sql.legacy.parquet.nanosAsLong`).
-  *     A file rewritten under the same path, or a read from another
-  *     session, infers again and replaces the path's one [[Memo]] entry.
+  *     once per [[inputVersion]] and set of parquet confs (inference
+  *     reads e.g. `spark.sql.legacy.parquet.nanosAsLong`), whatever
+  *     session reads it: a `Session.withConfs` clone with the same parquet
+  *     confs reads with no job. A file rewritten under the same path, or
+  *     a read under other parquet confs, infers again and replaces the
+  *     path's one [[Memo]] entry.
   */
 object Parquet {
 
@@ -30,7 +32,7 @@ object Parquet {
 
   private def inferredSchema(spark: SparkSession, path: String): StructType = {
     val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
-    val version = s"${System.identityHashCode(spark)};${inputVersion(spark, Seq(path))};$confs"
+    val version = s"${inputVersion(spark, Seq(path))};$confs"
     schemas(path, version)(spark.read.parquet(path).schema)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation, WriteFiles}
@@ -13,8 +13,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 /** Records what Spark posts on the SparkContext listener bus while test
-  * code runs: the `QueryExecution` of every finished SQL execution (any
-  * session of the context) and every streaming progress. Plans the engine
+  * code runs: every job start, the `QueryExecution` of every finished SQL
+  * execution (any session of the context) and every streaming progress. Plans the engine
   * hides behind a `Scoped` write, a `localCheckpoint` or a stream show here.
   */
 object PlanRecorder {
@@ -51,16 +51,24 @@ object PlanRecorder {
     def materialized: Seq[Execution] =
       executions.filter(_.writePath.exists(_.contains("/graft_mat_")))
 
+    /** Every streaming progress, in posting order. */
+    def progress: Seq[StreamingQueryProgress] =
+      events.asScala.toSeq.collect { case p: StreamingQueryProgress => p }
+
     /** Σ numRowsTotal of the last streaming progress (−1: none posted). */
-    def stateRows: Long = events.asScala.toSeq
-      .collect { case p: StreamingQueryProgress => p }.lastOption
+    def stateRows: Long = progress.lastOption
       .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
+
+    /** How many Spark jobs started. */
+    def jobs: Int = events.asScala.count(_.isInstanceOf[SparkListenerJobStart])
   }
 
   private val active = new CopyOnWriteArrayList[Recording]()
 
   private lazy val listener: Unit =
     TestSpark.spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        active.forEach(_.events.add(job))
       override def onOtherEvent(event: SparkListenerEvent): Unit = {
         val recorded = event match {
           case e: SparkListenerSQLExecutionEnd =>

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{SparkEntry, TestSpark}
+import graft.{Session, SparkEntry, TestSpark}
 import graft.operators.Silver
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -62,8 +62,12 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(jobsDuring(Tables.table(spark, TestSpark.Sf001, "orders")) === 0)
     assert(jobsDuring(Tables.events(spark, TestSpark.Sf001)) === 0)
     assert(jobsDuring(dailyBars.build(spark, TestSpark.Sf001)) === 0)
-    // a fresh session infers again: the memo is per session
-    assert(jobsDuring(Tables.table(spark.newSession(), TestSpark.Sf001, "orders")) > 0)
+    // the memo is per input version and parquet confs, not per session:
+    // a clone with the same parquet confs reads with no job, a clone with
+    // another parquet conf infers again
+    assert(jobsDuring(Tables.table(Session.withConfs(spark), TestSpark.Sf001, "orders")) === 0)
+    assert(jobsDuring(Tables.table(Session.withConfs(spark,
+      "spark.sql.parquet.binaryAsString" -> "true"), TestSpark.Sf001, "orders")) > 0)
   }
 
   test("a fixture file rewritten under the same path is read with its new schema") {
