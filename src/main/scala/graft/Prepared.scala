@@ -1,12 +1,14 @@
 package graft
 
 import graft.operators.Scoped
+import graft.plans.AsOfJoinPlan
 import graft.sources.{Memo, Parquet}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, OneRowRelation, Range, Repartition}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.internal.SQLConf
 
 /** The serving path of [[SparkEntry.queries]]. A dashboard asks the same
   * queries every few seconds over inputs that change only when a batch
@@ -25,6 +27,17 @@ import org.apache.spark.sql.graft.bridge
   * or `Range`. Any other leaf (a materialize or stream output dir, a
   * `LogicalRDD`, a streaming relation) means the build runs on every call,
   * side effects included.
+  *
+  * A served plan whose leaves, subqueries included, total at most the
+  * frame session's `spark.sql.adaptive.coalescePartitions.minPartitionSize`
+  * (Spark's `stats.sizeInBytes` estimate) is stored with a one-partition
+  * `Repartition(1, shuffle = false)` above each file scan and each as-of
+  * join (whose exec node reports no output partitioning). AQE would
+  * coalesce each of its shuffles into one partition anyway; a
+  * `CoalesceExec(1)` reports `SinglePartition`, so the planner adds no
+  * exchange for the windows, aggregates and joins above it and the query
+  * runs as one stage. The first request still returns the build's own
+  * frame, so plan audits and `graft.Bench` see the builders' plans.
   */
 private[graft] object Prepared {
 
@@ -39,14 +52,29 @@ private[graft] object Prepared {
       val df = build(spark, dir)
       fresh = Some(df)
       val plan = df.queryExecution.analyzed
-      if (servable(spark, plan, dir)) Some((df.sparkSession, plan)) else None
+      if (servable(spark, plan, dir)) Some((df.sparkSession, onePartitionIfSmall(df))) else None
     }
     fresh.orElse(prepared.map { case (s, plan) => bridge.dataset(s, plan) })
       .getOrElse(build(spark, dir))
   }
 
+  /** The build's analyzed plan, with one partition per file scan when its
+    * whole input fits below the session's AQE coalescing size (analyzed
+    * again once here, so a request's analyzer passes it through). */
+  private def onePartitionIfSmall(df: DataFrame): LogicalPlan = {
+    val qe = df.queryExecution
+    val input = qe.analyzed.collectWithSubqueries { case l: LeafNode => l.stats.sizeInBytes }.sum
+    if (input > qe.sparkSession.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+      qe.analyzed
+    else bridge.dataset(df.sparkSession, qe.analyzed.transformUpWithSubqueries {
+      case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
+        Repartition(1, shuffle = false, lr)
+      case j: AsOfJoinPlan => Repartition(1, shuffle = false, j)
+    }).queryExecution.analyzed
+  }
+
   /** Whether every leaf of `plan` is versioned with `dir`. */
-  private def servable(spark: SparkSession, plan: LogicalPlan, dir: String): Boolean = {
+  private[graft] def servable(spark: SparkSession, plan: LogicalPlan, dir: String): Boolean = {
     def qualified(p: String) = {
       val path = new Path(p)
       path.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(path).toString
